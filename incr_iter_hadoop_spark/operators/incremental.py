@@ -773,104 +773,57 @@ def pagerank_pruned(
     the reference's filter — the loop trades bounded error for a frontier
     that empties.
 
-    Returns (state, per-iteration frontier sizes). State never visits the
-    driver; the frontier count rides the persisted frontier DataFrame."""
-    from pyspark.storagelevel import StorageLevel
+    Returns (state, per-iteration frontier sizes). Runs on ``iterate()``:
+    the refresh step is round 1, and each round's distance is the size of
+    the frontier the next round propagates, observed on the round's own
+    materializing action. State never visits the driver."""
+    from ..plans.loopdriver import LoopCache, iterate
+    from .iterative import _pagerank_graph, _pagerank_push
 
-    from ..plans.loopdriver import negotiate_partitions
+    def rank(mass):
+        return F.lit(retain) + F.lit(damping) * mass
 
-    edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    n = negotiate_partitions(edges)
-    # adjacency + out-degree in one exchange (degree window rides the same
-    # src hash distribution — see pagerank())
-    from pyspark.sql.window import Window
-
-    static = (
-        edges.repartition(n, "src")
-        .withColumn("deg", F.count(F.lit(1)).over(Window.partitionBy("src")))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .repartition(n, "node")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    warm_full = nodes.join(warm, "node", "left").select(
-        "node", F.coalesce("rank", F.lit(1.0)).alias("rank")
-    )
-    # full-width refresh step (structural deltas reach every affected mass)
-    m0 = (
-        static.join(warm_full, static.src == warm_full.node)
-        .select("dst", (F.col("rank") / F.col("deg")).alias("contrib"))
-        .groupBy("dst")
-        .agg(F.sum("contrib").alias("mass"))
-    )
-    state = (
-        nodes.join(m0, nodes.node == m0.dst, "left")
-        .join(warm_full.withColumnRenamed("rank", "_warm"), "node")
-        .select(
-            "node",
-            F.coalesce("mass", F.lit(0.0)).alias("mass"),
-            (
-                F.lit(retain)
-                + F.lit(damping) * F.coalesce("mass", F.lit(0.0))
-            ).alias("rank"),
-            (
-                F.lit(retain)
-                + F.lit(damping) * F.coalesce("mass", F.lit(0.0))
-                - F.col("_warm")
-            ).alias("delta"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    state.count()
-    frontier_sizes: list[int] = []
-    for _i in range(1, iterations + 1):
+    def step(state: DataFrame, i: int) -> DataFrame:
+        if i == 1:
+            # full-width refresh: structural deltas reach every affected mass
+            m = _pagerank_push(static, state, "rank", "mass")
+            mass = F.coalesce("mass", F.lit(0.0))
+            return state.join(m, state.node == m.dst, "left").select(
+                "node",
+                mass.alias("mass"),
+                rank(mass).alias("rank"),
+                (rank(mass) - F.col("rank")).alias("delta"),
+            )
         # I9 propagation filter: same contract as changed_groups(), applied
         # per-iteration inside the loop
-        frontier = state.where(F.abs("delta") >= theta).select(
-            "node", "delta"
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        frontier_sizes.append(frontier.count())
-        if run_to_empty and frontier_sizes[-1] == 0:
-            # I4 termination, reference-style: an empty frontier IS the
-            # convergence signal (every remaining delta < theta) — no
-            # separate distance job needed
-            frontier.unpersist()
-            break
-        prop = (
-            static.join(frontier, static.src == frontier.node)
-            .select("dst", (F.col("delta") / F.col("deg")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("corr"))
+        frontier = state.where(F.abs("delta") >= theta)
+        c = _pagerank_push(static, frontier, "delta", "corr")
+        corr = F.coalesce("corr", F.lit(0.0))
+        mass = F.col("mass") + corr
+        return state.join(c, state.node == c.dst, "left").select(
+            "node",
+            mass.alias("mass"),
+            rank(mass).alias("rank"),
+            (F.lit(damping) * corr).alias("delta"),
         )
-        new_state = (
-            state.join(prop, state.node == prop.dst, "left")
-            .select(
-                "node",
-                (F.col("mass") + F.coalesce("corr", F.lit(0.0))).alias("mass"),
-                (
-                    F.lit(retain)
-                    + F.lit(damping)
-                    * (F.col("mass") + F.coalesce("corr", F.lit(0.0)))
-                ).alias("rank"),
-                (F.lit(damping) * F.coalesce("corr", F.lit(0.0))).alias(
-                    "delta"
-                ),
-            )
-            .localCheckpoint(eager=False)
-            .persist(StorageLevel.MEMORY_AND_DISK)
+
+    with LoopCache() as cache:
+        static, nodes = _pagerank_graph(cache, edges)
+        res = iterate(
+            nodes.join(warm, "node", "left").select(
+                "node", F.coalesce("rank", F.lit(1.0)).alias("rank")
+            ),
+            step,
+            max_iterations=iterations + 1,
+            observed_distance=F.sum(
+                (F.abs(F.col("delta")) >= theta).cast("long")
+            ).cast("double"),
+            # run_to_empty: an empty frontier IS the convergence signal
+            # (every remaining delta < theta); otherwise never stop early,
+            # since a frontier size is never negative
+            threshold=0.0 if run_to_empty else -1.0,
         )
-        new_state.count()
-        state.unpersist()
-        frontier.unpersist()
-        state = new_state
-    static.unpersist()
-    edges.unpersist()
-    nodes.unpersist()
-    return state, frontier_sizes
+    return res.state, [int(d) for d in res.distances[:iterations]]
 
 
 _PRUNED_THETA = 0.01

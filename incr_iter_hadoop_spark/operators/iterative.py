@@ -30,7 +30,7 @@ broadcast, mirroring GlobalUniqValueWritable.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -38,6 +38,7 @@ from ..catalog import load_table, spread_scan
 from ..functions.vector import cosine
 from ..plans.loopdriver import (
     IterationResult,
+    LoopCache,
     iterate,
     negotiate_partitions,
 )
@@ -47,6 +48,48 @@ from ..registry import register
 # PageRank
 
 
+def _pagerank_graph(cache: LoopCache, edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The loop invariants of PageRank over ``edges`` (src, dst), both
+    persisted in ``cache``: ``static`` (src, dst, deg) partitioned by src,
+    and the node set ``nodes`` (node) partitioned by node.
+
+    Each comes from ONE exchange. The degree window rides static's src
+    repartition as a within-partition sort (no groupBy + join). The node
+    set explodes both endpoints, repartitions by node and dedups within
+    the node-hash partitions, where equal nodes are already co-located.
+    Skew: a hot src key costs one task O(f) — linear, and the same row
+    placement the co-partitioned loop join needs anyway; see
+    bench/PLANS.md "pagerank degree computation" for the salted-fallback
+    criterion before trading away the shared exchange."""
+    from pyspark.sql.window import Window
+
+    # deg, static and nodes each derive from the edges, and callers often
+    # pass an expensive pipeline (e.g. the delta-applied graph)
+    edges = cache.input(edges)
+    n = negotiate_partitions(edges)
+    static = cache.persist(
+        edges.repartition(n, "src").withColumn(
+            "deg", F.count(F.lit(1)).over(Window.partitionBy("src"))
+        )
+    )
+    nodes = cache.persist(
+        edges.select(F.explode(F.array(F.col("src"), F.col("dst"))).alias("node"))
+        .repartition(n, "node")
+        .dropDuplicates(["node"])
+    )
+    return static, nodes
+
+
+def _pagerank_push(static: DataFrame, state: DataFrame, col: str, name: str) -> DataFrame:
+    """(dst, name): Σ state.col / deg over each node's in-edges."""
+    return (
+        static.join(state, static.src == state.node)
+        .select("dst", (F.col(col) / F.col("deg")).alias("_c"))
+        .groupBy("dst")
+        .agg(F.sum("_c").alias(name))
+    )
+
+
 def pagerank(
     edges: DataFrame,
     *,
@@ -54,8 +97,6 @@ def pagerank(
     retain: float = 0.2,
     max_iterations: int = 50,
     threshold: float | None = None,
-    checkpoint_interval: int | None = None,
-    num_partitions: int | None = None,
     init_state: DataFrame | None = None,
     observe_counts: bool = False,
 ) -> IterationResult:
@@ -67,87 +108,28 @@ def pagerank(
     iterative mode (SURVEY §3.3): after a graph delta, re-converging from
     the previous fixpoint takes far fewer iterations than from scratch.
 
-    One job per iteration: the state carries a ``delta`` column
-    (rankᵢ − rankᵢ₋₁, computed inside the step at zero extra shuffles since
-    the previous rank is already on the joined state row), and in converged
-    mode the L1 distance Σ|delta| rides the iteration's materializing
-    action via ``df.observe`` — no prev⋈curr full-outer join, no separate
-    distance job (the ``IterativeReducer.distance`` contract,
+    One materializing action per iteration. In converged mode the state
+    carries a ``delta`` column (rankᵢ − rankᵢ₋₁, computed inside the step
+    at zero extra shuffles since the previous rank is already on the joined
+    state row), and the L1 distance Σ|delta| rides that action via
+    ``df.observe`` — no prev⋈curr full-outer join, no separate distance
+    action (the ``IterativeReducer.distance`` contract,
     IterativeReducer.java:24-32, summed master-side like
     JobTracker.java:5586-5595)."""
-    # materialize the edge relation once: deg, static and nodes each derive
-    # from it, and callers often pass an expensive pipeline (e.g. the
-    # delta-applied graph — anti-join over two distincts) that would
-    # otherwise be recomputed per derivation
-    edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    n = num_partitions or negotiate_partitions(edges)
-    # static side: adjacency + out-degree in ONE exchange — the repartition
-    # provides the hash distribution the degree window needs, so deg comes
-    # from a within-partition sort instead of a groupBy shuffle + join.
-    # Skew: a hot src key costs one task O(f) — linear, and the same row
-    # placement the co-partitioned loop join needs anyway; see
-    # bench/PLANS.md "pagerank degree computation" for the salted-fallback
-    # criterion before trading away the shared exchange.
-    # r14 probe (VERDICT r13 ask #5): a bucketed-scratch pin of this
-    # relation (pin_bucketed) removed the setup exchange (shuffle 17.8 ->
-    # 12.3 MB, stages 133 -> 108, deterministic) but LOST wall decisively
-    # on interleaved A/B (medians 4.7-5.5 s -> 6.0-7.4 s): the parquet
-    # scatter-write + readback costs more than the one in-memory exchange
-    # it replaces at bench scale — REJECTED, see OPTIMIZATION_r14.md §5.
-    from pyspark.sql.window import Window
-
-    static = (
-        edges.repartition(n, "src")
-        .withColumn("deg", F.count(F.lit(1)).over(Window.partitionBy("src")))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    # r13: node set in ONE exchange — explode both endpoints, repartition
-    # by node, dedup WITHIN the node-hash partitions (hash(node) already
-    # co-locates equal nodes, so the dropDuplicates adds no second
-    # exchange). The former union+distinct+repartition paid two.
-    nodes = (
-        edges.select(
-            F.explode(F.array(F.col("src"), F.col("dst"))).alias("node")
-        )
-        .repartition(n, "node")
-        .dropDuplicates(["node"])
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    converged_mode = threshold is not None
-    if init_state is not None:
-        # warm start: keep prior ranks for surviving nodes, 1.0 for new ones
-        state0 = nodes.join(init_state, "node", "left").select(
-            "node", F.coalesce("rank", F.lit(1.0)).alias("rank")
-        )
-    else:
-        state0 = nodes.select("node", F.lit(1.0).alias("rank"))
-    if converged_mode:
-        state0 = state0.withColumn("delta", F.lit(0.0))
-
-    def _mass(state: DataFrame):
-        return (
-            static.join(state, static.src == state.node)
-            .select("dst", (F.col("rank") / F.col("deg")).alias("contrib"))
-            .groupBy("dst")
-            .agg(F.sum("contrib").alias("mass"))
-        )
-
     new_rank = F.lit(retain) + F.lit(damping) * F.coalesce("mass", F.lit(0.0))
 
     def step_bounded(state: DataFrame, i: int) -> DataFrame:
         # single state reference → linear plan growth between checkpoints
-        contribs = _mass(state)
+        contribs = _pagerank_push(static, state, "rank", "mass")
         return nodes.join(contribs, nodes.node == contribs.dst, "left").select(
             "node", new_rank.alias("rank")
         )
 
     def step_observed(state: DataFrame, i: int) -> DataFrame:
-        # the state invariantly holds every node, so joining the (persisted,
-        # node-partitioned) state instead of `nodes` keeps the previous rank
-        # on the row — the delta costs no extra join or shuffle. This step
-        # references state twice; iterate()'s observed path truncates
-        # lineage every iteration to keep the plan linear.
-        contribs = _mass(state)
+        # the state invariantly holds every node, so joining the
+        # node-partitioned state instead of `nodes` keeps the previous rank
+        # on the row — the delta costs no extra join or shuffle
+        contribs = _pagerank_push(static, state, "rank", "mass")
         prev = state.select("node", F.col("rank").alias("_prev"))
         return prev.join(contribs, prev.node == contribs.dst, "left").select(
             "node",
@@ -155,35 +137,35 @@ def pagerank(
             (new_rank - F.col("_prev")).alias("delta"),
         )
 
-    # r14 (guide §2.4, measured): bounded mode defaults to materializing
-    # EVERY round. The interval-5 mega-job re-derived the lazily-persisted
-    # invariants (nodes/static are referenced by all 5 chained rounds
-    # before any action caches them), writing DOUBLE the shuffle —
-    # interleaved A/B at sf0.1: pagerank_bounded5 33.386 -> 17.549 MB,
-    # incr_pagerank_delta5 35.813 -> 20.375 MB (deterministic, reproduced
-    # cold and warm), wall flat (3.75 -> 3.68 / 3.55 -> 3.52 s medians).
-    # This is pagerank-specific: the same A/B showed the mega-job's
-    # exchange reuse WINNING for lpa_bounded3 (15.9 vs 45.2 MB warm) and
-    # spmv, so iterate()'s own cadence default is untouched. Converged
-    # mode checkpoints per round regardless (observed-distance path);
-    # an explicit caller interval is honored either way.
-    result = iterate(
-        state0,
-        step_observed if converged_mode else step_bounded,
-        max_iterations=max_iterations,
-        observed_distance=(
-            F.sum(F.abs(F.col("delta"))) if converged_mode else None
-        ),
-        threshold=threshold if threshold is not None else 0.0,
-        checkpoint_interval=(
-            checkpoint_interval if checkpoint_interval is not None else 1
-        ),
-        observe_counts=observe_counts,
-    )
-    static.unpersist()
-    edges.unpersist()
-    nodes.unpersist()  # final state is already materialized by iterate()
-    return result
+    with LoopCache() as cache:
+        static, nodes = _pagerank_graph(cache, edges)
+        if init_state is not None:
+            # warm start: keep prior ranks for surviving nodes, 1.0 for new ones
+            state0 = nodes.join(init_state, "node", "left").select(
+                "node", F.coalesce("rank", F.lit(1.0)).alias("rank")
+            )
+        else:
+            state0 = nodes.select("node", F.lit(1.0).alias("rank"))
+        if threshold is not None:
+            return iterate(
+                state0.withColumn("delta", F.lit(0.0)),
+                step_observed,
+                max_iterations=max_iterations,
+                observed_distance=F.sum(F.abs(F.col("delta"))),
+                threshold=threshold,
+                observe_counts=observe_counts,
+            )
+        # Bounded mode materializes every round: a longer cadence runs
+        # several rounds in one job before any action has cached `nodes`
+        # and `static`, and that job re-derives them, writing double the
+        # shuffle (OPTIMIZATION_r14.md).
+        return iterate(
+            state0,
+            step_bounded,
+            max_iterations=max_iterations,
+            checkpoint_interval=1,
+            observe_counts=observe_counts,
+        )
 
 
 def _lineitem_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -334,7 +316,6 @@ def sssp(
     *,
     max_iterations: int = 50,
     run_to_fixpoint: bool = True,
-    checkpoint_interval: int = 5,
     init_state: DataFrame | None = None,
 ) -> IterationResult:
     """Single-source shortest paths by min-plus relaxation. State holds only
@@ -348,86 +329,64 @@ def sssp(
     insertion), so re-convergence relaxes only paths the new edges
     improve. Edge deletions need ``sssp_invalidate_affected`` first.
 
-    Fixpoint mode runs ONE job per iteration: the step's full-outer join
-    already has the previous distance on the row, so a ``changed`` flag
-    (min-plus only decreases — changed ⇔ new < prev or node is new) is
-    free, and the not-yet-converged count (A8) rides the materializing
-    action via ``df.observe`` instead of a second prev⋈curr join job."""
+    Fixpoint mode runs one materializing action per iteration: the step's
+    full-outer join already has the previous distance on the row, so a
+    ``changed`` flag (min-plus only decreases — changed ⇔ new < prev or node
+    is new) is free, and the not-yet-converged count (A8) rides that action
+    via ``df.observe`` instead of a second prev⋈curr join."""
     spark = edges.sparkSession
-    edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    n = negotiate_partitions(edges)
-    # r14 probe: pin_bucketed here lost wall 2x on interleaved A/B
-    # (3.9-7.5 -> 17.2 s) despite fewer shuffle bytes — rejected,
-    # OPTIMIZATION_r14.md §5
-    static = edges.repartition(n, "src").persist(StorageLevel.MEMORY_AND_DISK)
     state0 = (
         init_state
         if init_state is not None
         else spark.createDataFrame([(source, 0.0)], "node long, dist double")
     )
 
-    def step_bounded(state: DataFrame, i: int) -> DataFrame:
-        relaxed = (
+    def relaxed(state: DataFrame) -> DataFrame:
+        return (
             static.join(state, static.src == state.node)
             .select("dst", (F.col("dist") + F.col("w")).alias("cand"))
             .groupBy("dst")
             .agg(F.min("cand").alias("cand"))
         )
-        return (
-            state.join(relaxed, state.node == relaxed.dst, "full_outer")
-            .select(
-                F.coalesce("node", "dst").alias("node"),
-                F.least(
-                    F.coalesce("dist", F.lit(float("inf"))),
-                    F.coalesce("cand", F.lit(float("inf"))),
-                ).alias("dist"),
-            )
+
+    def step_bounded(state: DataFrame, i: int) -> DataFrame:
+        r = relaxed(state)
+        return state.join(r, state.node == r.dst, "full_outer").select(
+            F.coalesce("node", "dst").alias("node"),
+            F.least(
+                F.coalesce("dist", F.lit(float("inf"))),
+                F.coalesce("cand", F.lit(float("inf"))),
+            ).alias("dist"),
         )
 
     def step_observed(state: DataFrame, i: int) -> DataFrame:
         prev = state.select("node", F.col("dist").alias("_prev"))
-        relaxed = (
-            static.join(state, static.src == state.node)
-            .select("dst", (F.col("dist") + F.col("w")).alias("cand"))
-            .groupBy("dst")
-            .agg(F.min("cand").alias("cand"))
-        )
+        r = relaxed(state)
         new_dist = F.least(
             F.coalesce("_prev", F.lit(float("inf"))),
             F.coalesce("cand", F.lit(float("inf"))),
         )
-        return (
-            prev.join(relaxed, prev.node == relaxed.dst, "full_outer")
-            .select(
-                F.coalesce("node", "dst").alias("node"),
-                new_dist.alias("dist"),
-                F.when(
-                    F.col("_prev").isNull() | (new_dist < F.col("_prev")), 1
-                )
-                .otherwise(0)
-                .alias("changed"),
-            )
+        return prev.join(r, prev.node == r.dst, "full_outer").select(
+            F.coalesce("node", "dst").alias("node"),
+            new_dist.alias("dist"),
+            F.when(F.col("_prev").isNull() | (new_dist < F.col("_prev")), 1)
+            .otherwise(0)
+            .alias("changed"),
         )
 
-    if run_to_fixpoint:
+    with LoopCache() as cache:
+        edges = cache.input(edges)
+        static = cache.persist(edges.repartition(negotiate_partitions(edges), "src"))
+        if not run_to_fixpoint:
+            return iterate(state0, step_bounded, max_iterations=max_iterations)
         result = iterate(
             state0.withColumn("changed", F.lit(1)),
             step_observed,
             max_iterations=max_iterations,
             observed_distance=F.sum("changed").cast("double"),
             threshold=0.0,
-            checkpoint_interval=checkpoint_interval,
         )
-        result.state = result.state.drop("changed")
-    else:
-        result = iterate(
-            state0,
-            step_bounded,
-            max_iterations=max_iterations,
-            checkpoint_interval=checkpoint_interval,
-        )
-    static.unpersist()
-    edges.unpersist()
+    result.state = result.state.drop("changed")
     return result
 
 
@@ -657,39 +616,38 @@ def sssp_invalidate_affected(
     change-propagation filter, ReduceTask.java:3399-3428, at θ=0)."""
     u = state.select(F.col("node").alias("src"), F.col("dist").alias("_du"))
     v = state.select(F.col("node").alias("dst"), F.col("dist").alias("_dv"))
-    support = (
-        kept_edges.join(u, "src")
-        .join(v, "dst")
-        .where(F.col("_du") + F.col("w") <= F.col("_dv"))
-        .select("src", "dst")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    seeds = (
-        deleted_edges.join(u, "src")
-        .join(v, "dst")
-        .where(F.col("_du") + F.col("w") <= F.col("_dv"))
-        .select(F.col("dst").alias("node"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    affected = seeds
-    frontier = seeds
-    exhausted = True
-    for _ in range(max_rounds):
-        if frontier.count() == 0:
-            exhausted = False
-            break
+
+    def supporting(e: DataFrame) -> DataFrame:
+        return (
+            e.join(u, "src")
+            .join(v, "dst")
+            .where(F.col("_du") + F.col("w") <= F.col("_dv"))
+        )
+
+    seeds = supporting(deleted_edges).select(F.col("dst").alias("node")).distinct()
+
+    def step(affected: DataFrame, i: int) -> DataFrame:
+        # `new` marks the frontier: the nodes the previous round added
+        frontier = affected.where("new")
         nxt = (
             support.join(frontier, support.src == frontier.node)
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(affected, "node", "left_anti")
-            .localCheckpoint(eager=True)
         )
-        affected = affected.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-    support.unpersist()
-    if exhausted and frontier.count() != 0:
+        return affected.select("node", F.lit(False).alias("new")).unionByName(
+            nxt.select("node", F.lit(True).alias("new"))
+        )
+
+    with LoopCache() as cache:
+        support = cache.persist(supporting(kept_edges).select("src", "dst"))
+        res = iterate(
+            seeds.select("node", F.lit(True).alias("new")),
+            step,
+            max_iterations=max_rounds,
+            observed_distance=F.sum(F.col("new").cast("long")).cast("double"),
+        )
+    if not res.converged:
         # A silently truncated closure would leave stale lower-bound
         # distances — exactly what this pass exists to prevent. Fail loudly;
         # the caller can raise max_rounds (closure depth is bounded by the
@@ -699,7 +657,7 @@ def sssp_invalidate_affected(
             f"non-empty frontier after max_rounds={max_rounds}; raise "
             f"max_rounds (support-chain depth exceeds the cap)"
         )
-    return affected
+    return res.state.select("node")
 
 
 _SSSP_DEL_BASE_ROUNDS = 4
@@ -832,31 +790,38 @@ def incr_sssp_delete3(spark: SparkSession, sf_dir: str) -> DataFrame:
 # SpMV
 
 
+def _spmv_static(cache: LoopCache, matrix: DataFrame) -> DataFrame:
+    """The loop-invariant matrix (r, c, v), persisted in ``cache`` and
+    partitioned by the column key the product joins on."""
+    matrix = cache.input(matrix)
+    return cache.persist(matrix.repartition(negotiate_partitions(matrix), "c"))
+
+
+def _spmv_product(static: DataFrame, x: DataFrame) -> DataFrame:
+    """(i, x): A·x for the coordinate matrix ``static`` and vector ``x``
+    (i, x) — the partial-product accumulation of MatrixVector.java:231-276
+    as a join on the column key and a sum by row."""
+    return (
+        static.join(x, static.c == x.i)
+        .select("r", (F.col("v") * F.col("x")).alias("px"))
+        .groupBy("r")
+        .agg(F.sum("px").alias("x"))
+        .select(F.col("r").alias("i"), "x")
+    )
+
+
 def spmv(matrix: DataFrame, vector: DataFrame, iterations: int) -> IterationResult:
     """yᵢ₊₁ = A·yᵢ over a coordinate-form sparse matrix (r, c, v). The
     reference blocks the matrix (ONE2MUL, MatrixVector.java:93-147); in Spark
     coordinate form + hash shuffle on the join key is the same data movement
     without bespoke block codecs."""
-    matrix = matrix.persist(StorageLevel.MEMORY_AND_DISK)
-    n = negotiate_partitions(matrix)
-    # r14 probe: pin_bucketed here lost wall 2.4x on interleaved A/B
-    # (1.5-1.6 -> 3.7-5.0 s) despite shuffle 5.58 -> 3.17 MB — rejected,
-    # OPTIMIZATION_r14.md §5
-    static = matrix.repartition(n, "c").persist(StorageLevel.MEMORY_AND_DISK)
-
-    def step(state: DataFrame, i: int) -> DataFrame:
-        return (
-            static.join(state, static.c == state.i)
-            .select("r", (F.col("v") * F.col("x")).alias("px"))
-            .groupBy("r")
-            .agg(F.sum("px").alias("x"))
-            .select(F.col("r").alias("i"), "x")
+    with LoopCache() as cache:
+        static = _spmv_static(cache, matrix)
+        return iterate(
+            vector,
+            lambda state, i: _spmv_product(static, state),
+            max_iterations=iterations,
         )
-
-    result = iterate(vector, step, max_iterations=iterations)
-    static.unpersist()
-    matrix.unpersist()
-    return result
 
 
 _SPMV_MATRIX_SQL = """
@@ -924,53 +889,40 @@ def kmeans(
 
     Returns (assignment DataFrame ``id, cluster``, iterations run).
     Initial centers = first k points by id (deterministic)."""
-    spark = points.sparkSession
-    pts = points.select(
-        F.col(id_col).alias("id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("vec"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    centers = (
-        pts.orderBy("id")
-        .limit(k)
-        .select((F.row_number().over(_id_window()) - 1).alias("cid"), "vec")
-        .select("cid", F.col("vec").alias("cvec"))
-    )
-    iterations = 0
-    for iterations in range(1, max_iterations + 1):
-        assigned = _assign(pts, centers)
-        new_centers = (
-            assigned.select("cluster", F.posexplode("vec").alias("pos", "val"))
-            .groupBy("cluster", "pos")
-            .agg(F.avg("val").alias("m"))
-            .groupBy("cluster")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                    lambda s: s.getField("m"),
-                ).alias("cvec")
+    with LoopCache() as cache:
+        pts = cache.persist(
+            points.select(
+                F.col(id_col).alias("id"),
+                F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("vec"),
             )
-            .select(F.col("cluster").alias("cid"), "cvec")
         )
-        # centers are tiny: materialize driver-side to compare movement
-        old = {r["cid"]: r["cvec"] for r in centers.collect()}
-        new = {r["cid"]: r["cvec"] for r in new_centers.collect()}
-        movement = max(
-            (
-                sum((a - b) ** 2 for a, b in zip(old[cid], new[cid])) ** 0.5
-                for cid in new
-                if cid in old
-            ),
-            default=0.0,
+        centers = (
+            pts.orderBy("id")
+            .limit(k)
+            .select((F.row_number().over(_id_window()) - 1).alias("cid"), "vec")
+            .select("cid", F.col("vec").alias("cvec"))
         )
-        centers = new_centers.sparkSession.createDataFrame(
-            [(cid, list(map(float, vec))) for cid, vec in sorted(new.items())],
-            "cid int, cvec array<double>",
-        )
-        if movement <= tol:
-            break
-    final = _assign(pts, centers).select("id", "cluster")
-    pts.unpersist()
-    return final, iterations
+        iterations = 0
+        for iterations in range(1, max_iterations + 1):
+            new_centers = _centers(_assign(pts, centers))
+            # centers are tiny: materialize driver-side to compare movement
+            old = {r["cid"]: r["cvec"] for r in centers.collect()}
+            new = {r["cid"]: r["cvec"] for r in new_centers.collect()}
+            movement = max(
+                (
+                    sum((a - b) ** 2 for a, b in zip(old[cid], new[cid])) ** 0.5
+                    for cid in new
+                    if cid in old
+                ),
+                default=0.0,
+            )
+            centers = pts.sparkSession.createDataFrame(
+                [(cid, list(map(float, vec))) for cid, vec in sorted(new.items())],
+                "cid int, cvec array<double>",
+            )
+            if movement <= tol:
+                break
+        return _assign(pts, centers).select("id", "cluster"), iterations
 
 
 def _id_window():
@@ -993,6 +945,24 @@ def _assign(pts: DataFrame, centers: DataFrame) -> DataFrame:
     )
     return best.select(
         "id", "vec", (-F.col("b.ncid")).cast("int").alias("cluster")
+    )
+
+
+def _centers(assigned: DataFrame) -> DataFrame:
+    """(cid, cvec): the per-dimension mean of each cluster's points
+    (IterKmeans.java:413-458). Empty clusters drop out."""
+    return (
+        assigned.select("cluster", F.posexplode("vec").alias("pos", "val"))
+        .groupBy("cluster", "pos")
+        .agg(F.avg("val").alias("m"))
+        .groupBy("cluster")
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("pos", "m"))),
+                lambda s: s.getField("m"),
+            ).alias("cvec")
+        )
+        .select(F.col("cluster").alias("cid"), "cvec")
     )
 
 
@@ -1076,20 +1046,7 @@ def kmeans_lloyd_bounded(
 
     ``points``: (id, vec array<double>); ``centers``: (cid, cvec)."""
     for _ in range(rounds):
-        assigned = _assign(points, centers)
-        centers = (
-            assigned.select("cluster", F.posexplode("vec").alias("pos", "val"))
-            .groupBy("cluster", "pos")
-            .agg(F.avg("val").alias("m"))
-            .groupBy("cluster")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                    lambda s: s.getField("m"),
-                ).alias("cvec")
-            )
-            .select(F.col("cluster").alias("cid"), "cvec")
-        )
+        centers = _centers(_assign(points, centers))
     return centers
 
 
@@ -1405,6 +1362,18 @@ def kmeans_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Connected components (min-label propagation on the loop driver)
 
 
+def _symmetrize(edges: DataFrame, n: int) -> DataFrame:
+    """(src, dst) in both directions, deduplicated and partitioned by
+    hash(src, n) in ONE exchange: hash(src) co-locates equal (src, dst)
+    rows, so the dedup completes within the partitions."""
+    return (
+        edges.select("src", "dst")
+        .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        .repartition(n, "src")
+        .dropDuplicates(["src", "dst"])
+    )
+
+
 def connected_components(
     edges: DataFrame,
     *,
@@ -1440,102 +1409,56 @@ def connected_components(
     rounds instead of O(diameter). Nodes absent from ``init_labels`` start
     at their own id. Edge deletions would need a recompute (a component
     can split)."""
-    # the symmetrize-union references edges twice; persist first so an
-    # expensive upstream (e.g. a near-dup pair pipeline) evaluates once
-    edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    n = negotiate_partitions(edges)
-    # r13: symmetrize in ONE exchange — repartition by src, dedup within
-    # the src-hash partitions (equal (src, dst) rows are co-located, so
-    # dropDuplicates adds no second exchange); the former
-    # union+distinct+repartition paid two |2E| shuffles. Same fusion for
-    # the node set below: one node-hash exchange, in-partition dedup.
-    # (r14's pin_bucketed probe of this setup was wall-negative — see §5.)
-    sym = (
-        edges.select("src", "dst")
-        .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .repartition(n, "src")
-        .dropDuplicates(["src", "dst"])
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    endpoint_nodes = sym.select(F.col("src").alias("node"))
-    all_nodes = (
-        (
-            endpoint_nodes.union(nodes.select("node"))
-            if nodes is not None
-            else endpoint_nodes
-        )
-        .repartition(n, "node")
-        .dropDuplicates(["node"])
-    )
-    if init_labels is not None:
-        labeled = all_nodes.join(init_labels, "node", "left").select(
-            "node", F.coalesce("comp", F.col("node")).alias("comp")
-        ).repartition(n, "node")
-    else:
-        # all_nodes already carries hash(node, n) through the select
-        labeled = all_nodes.select("node", F.col("node").alias("comp"))
-    state = labeled.persist(StorageLevel.MEMORY_AND_DISK)
-    state.count()
-    backing = state  # the persisted DF whose blocks this round reads
-    frontier = state  # round 1: every node announces its own label
-    frontier_counts: list[float] = []
-    converged = False
-    i = 0
-    for i in range(1, max_iterations + 1):
+
+    def step(state: DataFrame, i: int) -> DataFrame:
+        # only the nodes whose label decreased last round (`chg`; round 1:
+        # all) announce their label
+        frontier = state.where("chg")
         prop = (
             sym.join(frontier, sym.src == frontier.node)
             .groupBy(F.col("dst").alias("node"))
             .agg(F.min("comp").alias("cand"))
         )
-        # ONE job per round: merge carries a `chg` flag, the frontier count
-        # rides the materializing count via df.observe (the same fusion
-        # that took converged PageRank to one job/iteration), and state /
-        # frontier are views over the SAME cached `merged` — no separate
-        # frontier checkpoint job. The lazy localCheckpoint truncates
-        # lineage when the count materializes it — each round's plan must
-        # reference only checkpointed blocks, or recomputation chains back
-        # through every earlier round (measured: quadratic blowup,
-        # 4s -> 15s by round 2 at sf0.1).
-        merged = (
-            state.join(prop, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    "comp", F.coalesce("cand", F.col("comp"))
-                ).alias("comp"),
-                # labels only decrease: strict decreases ARE the frontier
-                (
-                    F.coalesce("cand", F.col("comp")) < F.col("comp")
-                ).alias("chg"),
+        cand = F.coalesce("cand", F.col("comp"))
+        return state.join(prop, "node", "left").select(
+            "node",
+            F.least("comp", cand).alias("comp"),
+            # labels only decrease: strict decreases ARE the next frontier
+            (cand < F.col("comp")).alias("chg"),
+        )
+
+    with LoopCache() as cache:
+        # the symmetrize-union references edges twice; persist first so an
+        # expensive upstream (e.g. a near-dup pair pipeline) evaluates once
+        edges = cache.input(edges)
+        n = negotiate_partitions(edges)
+        sym = cache.persist(_symmetrize(edges, n))
+        # one node-hash exchange; the dedup runs within its partitions
+        endpoint_nodes = sym.select(F.col("src").alias("node"))
+        all_nodes = (
+            (
+                endpoint_nodes.union(nodes.select("node"))
+                if nodes is not None
+                else endpoint_nodes
             )
-            .localCheckpoint(eager=False)
+            .repartition(n, "node")
+            .dropDuplicates(["node"])
         )
-        obs = Observation()  # anonymous: names must be globally unique
-        merged = merged.observe(
-            obs, F.sum(F.col("chg").cast("long")).alias("n_changed")
+        if init_labels is not None:
+            labeled = all_nodes.join(init_labels, "node", "left").select(
+                "node", F.coalesce("comp", F.col("node")).alias("comp")
+            ).repartition(n, "node")
+        else:
+            # all_nodes already carries hash(node, n) through the select
+            labeled = all_nodes.select("node", F.col("node").alias("comp"))
+        result = iterate(
+            labeled.withColumn("chg", F.lit(True)),
+            step,
+            max_iterations=max_iterations,
+            observed_distance=F.sum(F.col("chg").cast("long")).cast("double"),
         )
-        # no Dataset-level persist: localCheckpoint already stores the
-        # round's blocks at MEMORY_AND_DISK when the count materializes it;
-        # a persist() on top would hold a second columnar copy of the same
-        # rows (review finding r4)
-        merged.count()
-        n_changed = int(obs.get["n_changed"] or 0)
-        frontier_counts.append(float(n_changed))
-        backing.unpersist()
-        backing = merged
-        state = merged.select("node", "comp")
-        frontier = merged.where("chg").select("node", "comp")
-        if n_changed == 0:
-            converged = True
-            break
-    sym.unpersist()
-    edges.unpersist()
-    return IterationResult(
-        state=state,
-        iterations=i,
-        converged=converged,
-        distances=frontier_counts,
-    )
+    result.state = result.state.select("node", "comp")
+    return result
 
 
 def connected_components_star(
@@ -1574,83 +1497,79 @@ def connected_components_star(
     LAST rounds, by which point the edge set is already collapsed to one
     row per non-root node); lineage is cut every round with a
     localCheckpoint materialized by the convergence count."""
-    n = negotiate_partitions(edges)
-    # the caller's edge plan can be expensive (e.g. a verified near-dup
-    # pair join) and is referenced by BOTH the oriented edge set and the
-    # node universe — persist it so each downstream evaluation reads cache
-    edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    # orient (u > v), drop self-loops; distinct because the rewrite rules
-    # are set-semantics (the convergence probe relies on it)
-    e = (
-        edges.select(
-            F.greatest("src", "dst").alias("u"), F.least("src", "dst").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .repartition(n, "u")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    # endpoint universe from the RAW edges (before the self-loop filter):
-    # a node appearing only in self-loops is still a singleton component
-    # and must be labeled — same contract as connected_components. One
-    # explode pass, materialized so the raw edges can be released.
-    endpoint_nodes = edges.select(
-        F.explode(F.array("src", "dst")).alias("node")
-    )
-    all_nodes = (
-        (
-            endpoint_nodes.union(nodes.select("node")) if nodes is not None
-            else endpoint_nodes
-        )
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    all_nodes.count()
-    prev_cnt = e.count()
-    edges.unpersist()
-    edge_counts: list[float] = []
-    converged = False
-    i = 0
-    for i in range(1, max_iterations + 1):
-        # large-star: group the SYMMETRIZED neighborhood by center
-        sym = e.select("u", "v").union(
-            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        mins = (
-            sym.groupBy("u")
-            .agg(F.min("v").alias("mn"))
-            .select("u", F.least("mn", F.col("u")).alias("m"))
-        )
-        large = (
-            sym.join(mins, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("a"), F.col("m").alias("b"))
-            .where(F.col("a") != F.col("b"))
-            .select(
-                F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v")
+    with LoopCache() as cache:
+        # the caller's edge plan can be expensive (e.g. a verified near-dup
+        # pair join) and is referenced by BOTH the oriented edge set and the
+        # node universe — persist it so each downstream evaluation reads cache
+        edges = cache.input(edges)
+        n = negotiate_partitions(edges)
+        # orient (u > v), drop self-loops; distinct because the rewrite rules
+        # are set-semantics (the convergence probe relies on it)
+        e = cache.persist(
+            edges.select(
+                F.greatest("src", "dst").alias("u"), F.least("src", "dst").alias("v")
             )
+            .where(F.col("u") != F.col("v"))
             .distinct()
+            .repartition(n, "u")
         )
-        # small-star: centers see only their ≤ neighbors (u > v holds)
-        mins2 = large.groupBy("u").agg(F.min("v").alias("m"))
-        small = (
-            large.join(mins2, "u")
-            .where(F.col("v") != F.col("m"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .union(mins2.select("u", F.col("m").alias("v")))
-            .distinct()
-            .localCheckpoint(eager=False)
+        # endpoint universe from the RAW edges (before the self-loop filter):
+        # a node appearing only in self-loops is still a singleton component
+        # and must be labeled — same contract as connected_components. One
+        # explode pass, materialized so the raw edges can be released; it
+        # stays cached after return, backing the lazily-read labels.
+        endpoint_nodes = edges.select(F.explode(F.array("src", "dst")).alias("node"))
+        all_nodes = cache.persist(
+            (
+                endpoint_nodes.union(nodes.select("node")) if nodes is not None
+                else endpoint_nodes
+            ).distinct()
         )
-        cnt = small.count()  # materializes the checkpoint
-        edge_counts.append(float(cnt))
-        if cnt == prev_cnt and small.exceptAll(e).isEmpty():
-            e.unpersist()
-            e = small
-            converged = True
-            break
-        e.unpersist()
-        e = small
-        prev_cnt = cnt
+        all_nodes.count()
+        prev_cnt = e.count()
+        cache.drop(edges)
+        edge_counts: list[float] = []
+        converged = False
+        i = 0
+        for i in range(1, max_iterations + 1):
+            # large-star: group the SYMMETRIZED neighborhood by center
+            sym = e.select("u", "v").union(
+                e.select(F.col("v").alias("u"), F.col("u").alias("v"))
+            )
+            mins = (
+                sym.groupBy("u")
+                .agg(F.min("v").alias("mn"))
+                .select("u", F.least("mn", F.col("u")).alias("m"))
+            )
+            large = (
+                sym.join(mins, "u")
+                .where(F.col("v") > F.col("u"))
+                .select(F.col("v").alias("a"), F.col("m").alias("b"))
+                .where(F.col("a") != F.col("b"))
+                .select(
+                    F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v")
+                )
+                .distinct()
+            )
+            # small-star: centers see only their ≤ neighbors (u > v holds)
+            mins2 = large.groupBy("u").agg(F.min("v").alias("m"))
+            small = (
+                large.join(mins2, "u")
+                .where(F.col("v") != F.col("m"))
+                .select(F.col("v").alias("u"), F.col("m").alias("v"))
+                .union(mins2.select("u", F.col("m").alias("v")))
+                .distinct()
+                .localCheckpoint(eager=False)
+            )
+            cnt = small.count()  # materializes the checkpoint
+            edge_counts.append(float(cnt))
+            done = cnt == prev_cnt and small.exceptAll(e).isEmpty()
+            cache.drop(e)
+            e, prev_cnt = small, cnt
+            if done:
+                converged = True
+                break
+        cache.keep(all_nodes)
     # fixpoint edge set is a star forest: u (non-root) → v (component min).
     # The min-agg guards the not-converged exit (max_iterations hit before
     # the fixpoint): a node may then still carry several parent edges, and
@@ -1686,36 +1605,23 @@ def power_iteration(
 
     ``matrix``: coordinate form (r, c, v). ``x0``: (i, x). Returns the
     normalized state and the per-iteration ∞-norms (eigenvalue estimates)."""
-    matrix = matrix.persist(StorageLevel.MEMORY_AND_DISK)
-    n = negotiate_partitions(matrix)
-    # r14 probe: pin_bucketed lost wall here too (2.1-3.2 -> 7.4 s
-    # interleaved) — rejected, OPTIMIZATION_r14.md §5
-    static = matrix.repartition(n, "c").persist(StorageLevel.MEMORY_AND_DISK)
-    x = x0.persist(StorageLevel.MEMORY_AND_DISK)
-    x.count()
     norms: list[float] = []
-    for _ in range(iterations):
-        y = (
-            static.join(x, static.c == x.i)
-            .select("r", (F.col("v") * F.col("x")).alias("px"))
-            .groupBy("r")
-            .agg(F.sum("px").alias("x"))
-            .select(F.col("r").alias("i"), "x")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        # global ∞-norm: the only driver round-trip, a single scalar
-        m = float(y.agg(F.max(F.abs(F.col("x")))).collect()[0][0])
-        norms.append(m)
-        # eager localCheckpoint both materializes and truncates lineage —
-        # the plan would otherwise grow one join+agg layer per iteration
-        new_x = y.select("i", (F.col("x") / F.lit(m)).alias("x")).localCheckpoint(
-            eager=True
-        )
-        y.unpersist()
-        x.unpersist()
-        x = new_x
-    static.unpersist()
-    matrix.unpersist()
+    with LoopCache() as cache:
+        static = _spmv_static(cache, matrix)
+        x = cache.input(x0)
+        x.count()
+        for _ in range(iterations):
+            y = cache.persist(_spmv_product(static, x))
+            # global ∞-norm: the only driver round-trip, a single scalar
+            m = float(y.agg(F.max(F.abs(F.col("x")))).collect()[0][0])
+            norms.append(m)
+            # eager localCheckpoint both materializes and truncates lineage —
+            # the plan would otherwise grow one join+agg layer per iteration
+            new_x = y.select("i", (F.col("x") / F.lit(m)).alias("x")).localCheckpoint(
+                eager=True
+            )
+            cache.drop(y, x)
+            x = new_x
     return x, norms
 
 
@@ -1768,7 +1674,7 @@ def nmf(
     updates — the reference's ``nmf`` generator workload
     (genGraphReduce.java:52-64) run on its iterative contract.
 
-    Spark-first shape (r5 plan pass, bench/PLANS.md): factors are held
+    Spark-first shape (bench/PLANS.md): factors are held
     RANK-WIDE — W:(r, w0..w{k-1}), H:(c, h0..h{k-1}) — because rank is a
     plan-time constant, which collapses each update to exactly ONE shuffle:
 
@@ -1802,140 +1708,122 @@ def nmf(
     import operator
     from functools import reduce
 
-    # persist/unpersist are not refcounted, so only manage the cache marker
-    # if the CALLER hasn't already persisted ratings — unpersisting a
-    # caller-persisted input would silently drop THEIR cache (the
-    # incr_nmf_delta2 bug class: its source matrix got recomputed per use)
-    own_persist = ratings.storageLevel.useMemory is False and (
-        ratings.storageLevel.useDisk is False
-    )
-    if own_persist:
-        ratings = ratings.persist(StorageLevel.MEMORY_AND_DISK)
-    n = negotiate_partitions(ratings)
-    # lazy persists: the init-factor / first-iteration jobs materialize each
-    # layout on first use — no dedicated warm-up pass per copy.
-    # (r14's pin_bucketed probe of both layouts was wall-negative:
-    # 3.0-3.3 -> 4.5-5.2 s interleaved despite shuffle 7.6 -> 2.8 MB —
-    # rejected, OPTIMIZATION_r14.md §5.)
-    v_r = ratings.repartition(n, "r").persist(StorageLevel.MEMORY_AND_DISK)
-    v_c = v_r.repartition(n, "c").persist(StorageLevel.MEMORY_AND_DISK)
-    ks = list(range(rank))
-    # ``init_w`` (r, f, w) / ``init_h`` (f, c, h) warm-start the loop — the
-    # incremental iterative mode (SURVEY §3.3): after a ratings delta,
-    # re-running a couple of rounds from the preserved factors replaces a
-    # cold re-factorization. Keys NEW in this matrix (rows/cols the delta
-    # introduced) fall back to the deterministic cold-init formula.
-    w_cold = {
-        f: (1.0 + ((F.col("r") * 7 + F.lit(f) * 3) % 5) * 0.1) for f in ks
-    }
-    w = v_r.select("r").distinct()
-    if init_w is not None:
-        wide = init_w.groupBy("r").pivot("f", ks).agg(F.first("w"))
-        wide = wide.select(
-            "r", *[F.col(str(f)).alias(f"_iw{f}") for f in ks]
-        )
-        w = w.join(wide, "r", "left").select(
-            "r",
-            *[F.coalesce(F.col(f"_iw{f}"), w_cold[f]).alias(f"w{f}") for f in ks],
-        )
-    else:
-        w = w.select("r", *[w_cold[f].alias(f"w{f}") for f in ks])
-    w = w.repartition(n, "r").localCheckpoint(eager=True)
-    h_cold = {
-        f: (1.0 + ((F.col("c") * 11 + F.lit(f) * 5) % 7) * 0.1) for f in ks
-    }
-    h = v_c.select("c").distinct()
-    if init_h is not None:
-        wide = init_h.groupBy("c").pivot("f", ks).agg(F.first("h"))
-        wide = wide.select(
-            "c", *[F.col(str(f)).alias(f"_ih{f}") for f in ks]
-        )
-        h = h.join(wide, "c", "left").select(
-            "c",
-            *[F.coalesce(F.col(f"_ih{f}"), h_cold[f]).alias(f"h{f}") for f in ks],
-        )
-    else:
-        h = h.select("c", *[h_cold[f].alias(f"h{f}") for f in ks])
-    h = h.repartition(n, "c").localCheckpoint(eager=True)
-
-    def _gram(fac: DataFrame, p: str):
-        return fac.agg(
-            *[
-                F.sum(F.col(f"{p}{a}") * F.col(f"{p}{b}")).alias(f"g{a}_{b}")
-                for a in ks
-                for b in ks
-            ]
-        )
-
-    def _den(p: str):
-        # den_f = Σ_j G_fj · fac_j as one scalar expression per output col
-        return {
-            f: reduce(
-                operator.add,
-                [F.col(f"g{f}_{j}") * F.col(f"{p}{j}") for j in ks],
-            )
-            for f in ks
+    with LoopCache() as cache:
+        # lazy persists: the init-factor / first-iteration jobs materialize each
+        # layout on first use — no dedicated warm-up pass per copy
+        ratings = cache.input(ratings)
+        n = negotiate_partitions(ratings)
+        v_r = cache.persist(ratings.repartition(n, "r"))
+        v_c = cache.persist(v_r.repartition(n, "c"))
+        ks = list(range(rank))
+        # ``init_w`` (r, f, w) / ``init_h`` (f, c, h) warm-start the loop — the
+        # incremental iterative mode (SURVEY §3.3): after a ratings delta,
+        # re-running a couple of rounds from the preserved factors replaces a
+        # cold re-factorization. Keys NEW in this matrix (rows/cols the delta
+        # introduced) fall back to the deterministic cold-init formula.
+        w_cold = {
+            f: (1.0 + ((F.col("r") * 7 + F.lit(f) * 3) % 5) * 0.1) for f in ks
         }
-
-    for _it in range(1, iterations + 1):
-        # H ← H ∘ (WᵀV) / (WᵀW·H)
-        num_h = (
-            v_r.join(w, "r")
-            .groupBy("c")
-            .agg(
-                *[
-                    F.sum(F.col(f"w{f}") * F.col("v")).alias(f"num{f}")
-                    for f in ks
-                ]
+        w = v_r.select("r").distinct()
+        if init_w is not None:
+            wide = init_w.groupBy("r").pivot("f", ks).agg(F.first("w"))
+            wide = wide.select(
+                "r", *[F.col(str(f)).alias(f"_iw{f}") for f in ks]
             )
-        )
-        den_h = _den("h")
-        h_new = (
-            h.join(num_h, "c")
-            .crossJoin(F.broadcast(_gram(w, "w")))
-            .select(
-                "c",
-                *[
-                    (F.col(f"h{f}") * F.col(f"num{f}") / den_h[f]).alias(
-                        f"h{f}"
-                    )
-                    for f in ks
-                ],
-            )
-        ).localCheckpoint(eager=True)
-        h.unpersist()
-        h = h_new
-        # W ← W ∘ (V·Hᵀ) / (W·H·Hᵀ)
-        num_w = (
-            v_c.join(h, "c")
-            .groupBy("r")
-            .agg(
-                *[
-                    F.sum(F.col("v") * F.col(f"h{f}")).alias(f"num{f}")
-                    for f in ks
-                ]
-            )
-        )
-        den_w = _den("w")
-        w_new = (
-            w.join(num_w, "r")
-            .crossJoin(F.broadcast(_gram(h, "h")))
-            .select(
+            w = w.join(wide, "r", "left").select(
                 "r",
-                *[
-                    (F.col(f"w{f}") * F.col(f"num{f}") / den_w[f]).alias(
-                        f"w{f}"
-                    )
-                    for f in ks
-                ],
+                *[F.coalesce(F.col(f"_iw{f}"), w_cold[f]).alias(f"w{f}") for f in ks],
             )
-        ).localCheckpoint(eager=True)
-        w.unpersist()
-        w = w_new
-    if own_persist:
-        ratings.unpersist()
-    v_r.unpersist()
-    v_c.unpersist()
+        else:
+            w = w.select("r", *[w_cold[f].alias(f"w{f}") for f in ks])
+        w = w.repartition(n, "r").localCheckpoint(eager=True)
+        h_cold = {
+            f: (1.0 + ((F.col("c") * 11 + F.lit(f) * 5) % 7) * 0.1) for f in ks
+        }
+        h = v_c.select("c").distinct()
+        if init_h is not None:
+            wide = init_h.groupBy("c").pivot("f", ks).agg(F.first("h"))
+            wide = wide.select(
+                "c", *[F.col(str(f)).alias(f"_ih{f}") for f in ks]
+            )
+            h = h.join(wide, "c", "left").select(
+                "c",
+                *[F.coalesce(F.col(f"_ih{f}"), h_cold[f]).alias(f"h{f}") for f in ks],
+            )
+        else:
+            h = h.select("c", *[h_cold[f].alias(f"h{f}") for f in ks])
+        h = h.repartition(n, "c").localCheckpoint(eager=True)
+
+        def _gram(fac: DataFrame, p: str):
+            return fac.agg(
+                *[
+                    F.sum(F.col(f"{p}{a}") * F.col(f"{p}{b}")).alias(f"g{a}_{b}")
+                    for a in ks
+                    for b in ks
+                ]
+            )
+
+        def _den(p: str):
+            # den_f = Σ_j G_fj · fac_j as one scalar expression per output col
+            return {
+                f: reduce(
+                    operator.add,
+                    [F.col(f"g{f}_{j}") * F.col(f"{p}{j}") for j in ks],
+                )
+                for f in ks
+            }
+
+        for _it in range(1, iterations + 1):
+            # H ← H ∘ (WᵀV) / (WᵀW·H)
+            num_h = (
+                v_r.join(w, "r")
+                .groupBy("c")
+                .agg(
+                    *[
+                        F.sum(F.col(f"w{f}") * F.col("v")).alias(f"num{f}")
+                        for f in ks
+                    ]
+                )
+            )
+            den_h = _den("h")
+            h = (
+                h.join(num_h, "c")
+                .crossJoin(F.broadcast(_gram(w, "w")))
+                .select(
+                    "c",
+                    *[
+                        (F.col(f"h{f}") * F.col(f"num{f}") / den_h[f]).alias(
+                            f"h{f}"
+                        )
+                        for f in ks
+                    ],
+                )
+            ).localCheckpoint(eager=True)
+            # W ← W ∘ (V·Hᵀ) / (W·H·Hᵀ)
+            num_w = (
+                v_c.join(h, "c")
+                .groupBy("r")
+                .agg(
+                    *[
+                        F.sum(F.col("v") * F.col(f"h{f}")).alias(f"num{f}")
+                        for f in ks
+                    ]
+                )
+            )
+            den_w = _den("w")
+            w = (
+                w.join(num_w, "r")
+                .crossJoin(F.broadcast(_gram(h, "h")))
+                .select(
+                    "r",
+                    *[
+                        (F.col(f"w{f}") * F.col(f"num{f}") / den_w[f]).alias(
+                            f"w{f}"
+                        )
+                        for f in ks
+                    ],
+                )
+            ).localCheckpoint(eager=True)
     w_long = w.select(
         "r",
         F.explode(
@@ -2261,25 +2149,16 @@ def iteration_snapshot_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.readers import write_iteration_snapshot
     from .incremental import _cleanup_at_exit
 
-    m = _spmv_matrix(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
-    x = m.select(F.col("c").alias("i")).distinct().select(
-        "i", F.lit(1.0).alias("x")
-    )
     base = tempfile.mkdtemp(prefix="iter_snapshots_")
     _cleanup_at_exit(base, "")
-    static = m.repartition(8, "c").persist(StorageLevel.MEMORY_AND_DISK)
-    for it in range(1, 3):
-        x = (
-            static.join(x, static.c == x.i)
-            .select("r", (F.col("v") * F.col("x")).alias("px"))
-            .groupBy("r")
-            .agg(F.sum("px").alias("x"))
-            .select(F.col("r").alias("i"), "x")
-            .localCheckpoint(eager=True)
+    with LoopCache() as cache:
+        static = _spmv_static(cache, _spmv_matrix(spark, sf_dir))
+        x = static.select(F.col("c").alias("i")).distinct().select(
+            "i", F.lit(1.0).alias("x")
         )
-        write_iteration_snapshot(x, base, it)
-    m.unpersist()
-    static.unpersist()
+        for it in range(1, 3):
+            x = _spmv_product(static, x).localCheckpoint(eager=True)
+            write_iteration_snapshot(x, base, it)
     back = spark.read.parquet(base).where(F.col("iteration") == 2)
     return back.select("i", F.round("x", 6).alias("x"))
 
@@ -2333,26 +2212,28 @@ def graph_kcore_bounded3(spark: SparkSession, sf_dir: str) -> DataFrame:
     und = base.select(F.col("p").alias("a"), F.col("s").alias("b")).unionByName(
         base.select(F.col("s").alias("a"), F.col("p").alias("b"))
     )
-    und = und.repartition(32, "a").localCheckpoint(eager=True)
-    for _ in range(3):
+
+    def peel(state: DataFrame, i: int) -> DataFrame:
         surv = (
-            und.groupBy("a")
+            state.groupBy("a")
             .agg(F.count(F.lit(1)).alias("d"))
             .where(F.col("d") >= 3)
             .select("a")
         )
-        und = (
-            und.join(surv, "a", "left_semi")
-            .join(surv.withColumnRenamed("a", "b"), "b", "left_semi")
-            .localCheckpoint(eager=True)
+        return state.join(surv, "a", "left_semi").join(
+            surv.withColumnRenamed("a", "b"), "b", "left_semi"
         )
+
+    und = iterate(
+        und.repartition(32, "a"), peel, max_iterations=3, checkpoint_interval=1
+    ).state
     return und.groupBy("a").agg(F.count(F.lit(1)).alias("deg")).select(
         F.col("a").alias("node"), F.col("deg").cast("bigint").alias("deg")
     )
 
 
 # ---------------------------------------------------------------------------
-# Label propagation (round 12) — synchronous LPA through the iterate()
+# Label propagation — synchronous LPA through the iterate()
 # driver: one more workload shape the reference's iterative contract
 # (IterativeMapper/Reducer + Projector ONE2ONE, IterativeMapper.java:7-16)
 # expresses directly, beyond the shipped sp/pg/km/nmf/power generators.
@@ -2369,74 +2250,59 @@ def label_propagation(
     CC (dedup.py's star-CC twin) is the degenerate always-adopt-minimum
     variant.
 
-    Plan per round: one (dst, label) count shuffle + one dst argmax
-    shuffle + the state left-join — argmax via max(struct(cnt, -label)),
-    never a per-node window sort."""
-    edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    # r13 (guide §2.4): pin the loop-invariant symmetrized edge list to a
-    # src-hash partitioning ONCE — without it every round's sym⋈state join
-    # re-exchanged all |2E| edge rows (measured: the edge re-shuffle was
-    # most of lpa_converged's 144 MB of shuffle writes at sf0.1); with it
-    # only the small per-round state/label relations move.
-    n = negotiate_partitions(edges)
-    # r13: symmetrize in ONE exchange — repartition by src first, then
-    # dedup within the src-hash partitions (hash(src) co-locates equal
-    # (src, dst) rows, so dropDuplicates adds no second exchange); the
-    # former union+distinct+repartition paid two |2E| shuffles. The node
-    # set dedups within the same partitioning for free. (r14's
-    # pin_bucketed probe of this setup was wall-negative — see §5.)
-    sym = (
-        edges.union(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .repartition(n, "src")
-        .dropDuplicates(["src", "dst"])
-    )
-    sym = sym.persist(StorageLevel.MEMORY_AND_DISK)
-    nodes = sym.dropDuplicates(["src"]).select(F.col("src").alias("node"))
-    state0 = nodes.select("node", F.col("node").alias("label"))
+    Plan per round: one aggregation exchange (``_lpa_winners``) + the
+    state left-join."""
 
     def step(state: DataFrame, i: int) -> DataFrame:
-        # r13 §8 (guide §2.3/§2.4): ONE aggregation exchange per round.
-        # The natural groupBy(dst,label)→groupBy(dst) pair pays two
-        # exchanges (hash(dst,label) does not satisfy the dst argmax's
-        # clustering). Repartitioning the joined neighbor-labels on dst
-        # FIRST lets both aggregates complete within that one exchange —
-        # HashPartitioning(dst) satisfies ClusteredDistribution(dst,label)
-        # — and in round 1 the (dst,label) pairs are all-distinct anyway,
-        # so the map-side combine the explicit repartition forgoes had
-        # nothing to combine. Integer count/argmax is order-independent:
-        # results are bit-identical (oracle re-proved).
-        # Combine-loss tradeoff (ADVICE r13): from round 2 on labels
-        # converge, so this shape shuffles raw |2E| neighbor-label rows
-        # where a groupBy-first plan would combine them map-side to
-        # (dst,label) pairs before its two exchanges. Measured at sf0.1
-        # across ALL rounds of the converged runs it is still a net win
-        # (128.27→109.63 MB total shuffle, 3 exchanges→1) — but the
-        # balance is scale/convergence-dependent: re-check shuffle bytes
-        # (lpa_converged_shuffle_mb in the bench line) if the converged
-        # workload moves to a larger SF or more max_iterations.
-        nbr = (
-            sym.join(state, sym.src == state.node)
-            .select("dst", "label")
-            .repartition(n, "dst")
-        )
-        counts = nbr.groupBy("dst", "label").agg(
-            F.count(F.lit(1)).alias("cnt")
-        )
-        winners = (
-            counts.groupBy("dst")
-            .agg(F.max(F.struct("cnt", (-F.col("label")).alias("nl"))).alias("w"))
-            .select("dst", (-F.col("w.nl")).alias("win"))
-        )
+        winners = _lpa_winners(sym, state, n)
         return state.join(
             winners, state.node == winners.dst, "left"
         ).select("node", F.coalesce("win", "label").alias("label"))
 
-    res = iterate(state0, step, max_iterations=max_iterations)
-    sym.unpersist()
-    edges.unpersist()
-    return res
+    with LoopCache() as cache:
+        n, sym, nodes = _lpa_graph(cache, edges)
+        return iterate(
+            nodes.select("node", F.col("node").alias("label")),
+            step,
+            max_iterations=max_iterations,
+        )
+
+
+def _lpa_graph(cache: LoopCache, edges: DataFrame) -> tuple[int, DataFrame, DataFrame]:
+    """(n, sym, nodes) for label propagation over ``edges``: the
+    symmetrized edge list ``sym``, persisted in ``cache`` and partitioned
+    by hash(src, n) so each round's sym⋈state join moves only the state,
+    and its node set (deduplicated within those partitions)."""
+    edges = cache.input(edges)
+    n = negotiate_partitions(edges)
+    sym = cache.persist(_symmetrize(edges, n))
+    return n, sym, sym.dropDuplicates(["src"]).select(F.col("src").alias("node"))
+
+
+def _lpa_winners(sym: DataFrame, state: DataFrame, n: int) -> DataFrame:
+    """(dst, win): each node's most frequent neighbor label, ties to the
+    smallest (argmax as max(struct(cnt, -label)), never a window sort).
+
+    ONE aggregation exchange: the neighbor labels are repartitioned on dst
+    first, and HashPartitioning(dst) satisfies the clustering of both the
+    (dst, label) count and the dst argmax. Projecting to (dst, label)
+    before the exchange keeps the state's other columns out of it.
+    Integer count/argmax is order-independent, so results are exact.
+    Trade-off: once labels converge this shuffles raw neighbor-label rows
+    where a count-first plan would combine them map-side; over whole
+    converged runs the one-exchange shape measured smaller and faster
+    (OPTIMIZATION_r14.md §3) — re-check if the graph or round count grows."""
+    nbr = (
+        sym.join(state, sym.src == state.node)
+        .select("dst", "label")
+        .repartition(n, "dst")
+    )
+    counts = nbr.groupBy("dst", "label").agg(F.count(F.lit(1)).alias("cnt"))
+    return (
+        counts.groupBy("dst")
+        .agg(F.max(F.struct("cnt", (-F.col("label")).alias("nl"))).alias("w"))
+        .select("dst", (-F.col("w.nl")).alias("win"))
+    )
 
 
 def _lpa_sql(n_iter: int, edges_sql: str = _PR_EDGES_SQL) -> str:
@@ -2496,9 +2362,9 @@ def lpa_bounded3(spark: SparkSession, sf_dir: str) -> DataFrame:
 def label_propagation_converged(
     edges: DataFrame, *, max_iterations: int = 30
 ) -> IterationResult:
-    """CONVERGENCE-guarded synchronous LPA (round 13 — VERDICT r12 ask #3):
-    same per-round rule as :func:`label_propagation`, terminating via the
-    reference's I4 contract (converge OR max-iter, JobConf.java:494-500) —
+    """CONVERGENCE-guarded synchronous LPA: same per-round rule as
+    :func:`label_propagation`, terminating via the reference's I4 contract
+    (converge OR max-iter, JobConf.java:494-500) —
     but "no change" alone is NOT a sound stop rule for synchronous LPA:
     on bipartite structure it 2-cycles forever (a matched pair swaps
     labels every round). Convergence here is OSCILLATION-AWARE: stop at
@@ -2510,68 +2376,12 @@ def label_propagation_converged(
     the labels one/two rounds back, shifted by the step itself — so the
     stop metric min(#label≠p1, #label≠p2) is a plain aggregate over the
     NEW state and rides the iteration's own materializing action via
-    ``df.observe`` (one Spark job per round, no prev⋈curr distance join).
-    NULL p2 in round 1 counts as changed, disabling the period-2 test
-    until two states exist."""
-    edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    # r13: loop-invariant edges pinned to one src-hash partitioning, as in
-    # label_propagation above (guide §2.4 — the per-round edge re-shuffle
-    # dominated this query's shuffle bytes)
-    n = negotiate_partitions(edges)
-    # r13: symmetrize in ONE exchange — repartition by src first, then
-    # dedup within the src-hash partitions (hash(src) co-locates equal
-    # (src, dst) rows, so dropDuplicates adds no second exchange); the
-    # former union+distinct+repartition paid two |2E| shuffles. The node
-    # set dedups within the same partitioning for free. (r14's
-    # pin_bucketed probe of this setup was wall-negative — see §5.)
-    sym = (
-        edges.union(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .repartition(n, "src")
-        .dropDuplicates(["src", "dst"])
-    )
-    sym = sym.persist(StorageLevel.MEMORY_AND_DISK)
-    nodes = sym.dropDuplicates(["src"]).select(F.col("src").alias("node"))
-    state0 = nodes.select(
-        "node",
-        F.col("node").alias("label"),
-        F.lit(None).cast("bigint").alias("p1"),
-        F.lit(None).cast("bigint").alias("p2"),
-    )
+    ``df.observe`` (one materializing action per round, no prev⋈curr
+    distance join). NULL p2 in round 1 counts as changed, disabling the
+    period-2 test until two states exist."""
 
     def step(state: DataFrame, i: int) -> DataFrame:
-        # r13 §8: one aggregation exchange per round — see the bounded
-        # twin above for the full rationale (repartition on dst, then both
-        # the (dst,label) count and the dst argmax complete within that
-        # single exchange) and for the ADVICE r13 combine-loss tradeoff
-        # note (rounds >= 2 shuffle raw |2E| label rows; measured net win
-        # at sf0.1 over whole converged runs — re-check via the bench's
-        # lpa_converged_shuffle_mb if SF or max_iterations grow);
-        # projecting to (dst,label) first keeps the carried p1/p2 history
-        # columns out of the exchange (guide §2.2).
-        # r14 interleaved A/B (VERDICT ask #3) CONFIRMED this shape: on an
-        # identical setup, the combine-first alternative (groupBy(dst,
-        # label) before the repartition) shuffled MORE over the full
-        # converged run — +31.5 MB / +21 stages / wall 15.5 vs 13.0 s
-        # median — because a dst's neighbors scatter across map
-        # partitions, so (dst,label) pairs stay mostly distinct map-side
-        # even once labels converge; and session-width n=32 lost to the
-        # negotiated n (+3.6 MB / wall 25.6 vs 13.0 s median). Numbers in
-        # OPTIMIZATION_r14.md §3.
-        nbr = (
-            sym.join(state, sym.src == state.node)
-            .select("dst", "label")
-            .repartition(n, "dst")
-        )
-        counts = nbr.groupBy("dst", "label").agg(
-            F.count(F.lit(1)).alias("cnt")
-        )
-        winners = (
-            counts.groupBy("dst")
-            .agg(F.max(F.struct("cnt", (-F.col("label")).alias("nl"))).alias("w"))
-            .select("dst", (-F.col("w.nl")).alias("win"))
-        )
+        winners = _lpa_winners(sym, state, n)
         return state.join(
             winners, state.node == winners.dst, "left"
         ).select(
@@ -2581,21 +2391,25 @@ def label_propagation_converged(
             F.col("p1").alias("p2"),
         )
 
-    changed_vs = lambda col: F.sum(  # noqa: E731 — tiny local aggregate
-        F.when(F.col("label") == F.col(col), F.lit(0)).otherwise(F.lit(1))
-    )
-    res = iterate(
-        state0,
-        step,
-        max_iterations=max_iterations,
-        observed_distance=F.least(
-            changed_vs("p1"), changed_vs("p2")
-        ).cast("double"),
-        threshold=0.0,
-    )
-    sym.unpersist()
-    edges.unpersist()
-    return res
+    def changed_vs(col: str):
+        return F.sum(F.when(F.col("label") == F.col(col), 0).otherwise(1))
+
+    with LoopCache() as cache:
+        n, sym, nodes = _lpa_graph(cache, edges)
+        return iterate(
+            nodes.select(
+                "node",
+                F.col("node").alias("label"),
+                F.lit(None).cast("bigint").alias("p1"),
+                F.lit(None).cast("bigint").alias("p2"),
+            ),
+            step,
+            max_iterations=max_iterations,
+            observed_distance=F.least(
+                changed_vs("p1"), changed_vs("p2")
+            ).cast("double"),
+            threshold=0.0,
+        )
 
 
 # strictly-disjoint union: the natural part→supplier graph PLUS a planted
@@ -2686,8 +2500,8 @@ WHERE a.rnd = COALESCE(s.rnd, {max_rounds})"""
 @register(
     "lpa_converged",
     oracle=_lpa_converged_sql(8),
-    doc="I4 oscillation-guarded LPA termination (round 13 — VERDICT r12 "
-    "ask #3): synchronous label propagation run to an OSCILLATION-AWARE "
+    doc="I4 oscillation-guarded LPA termination: synchronous label "
+    "propagation run to an OSCILLATION-AWARE "
     "stop — the first round whose state equals the state one round back "
     "(fixpoint) or two rounds back (period-2 limit cycle), max-iter "
     "fallback per the reference's converge-or-max-iter contract "
@@ -2695,9 +2509,9 @@ WHERE a.rnd = COALESCE(s.rnd, {max_rounds})"""
     "(one offset edge pair per order) that provably 2-cycles, so the "
     "period-2 rule is what fires (round 4/5/6 at sf0.001/0.01/0.1 — "
     "data-chosen); plain no-change detection would spin to max-iter. The "
-    "stop metric rides df.observe on the iteration's own action (one job "
-    "per round). EXACT oracle: unrolled CTE chain computing every "
-    "round's change-counts vs one AND two rounds back, selecting the "
+    "stop metric rides df.observe on the iteration's own action (one "
+    "materializing action per round). EXACT oracle: unrolled CTE chain "
+    "computing every round's change-counts vs one AND two rounds back, selecting the "
     "first round either hits zero — poisoning (-1) if 8 rounds don't.",
 )
 def lpa_converged(spark: SparkSession, sf_dir: str) -> DataFrame:

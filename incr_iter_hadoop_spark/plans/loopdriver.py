@@ -14,11 +14,16 @@ lines of driver-side control flow:
   locality the reference's custom scheduler chased;
 - each iteration is a declarative DataFrame transformation; Catalyst reuses
   the co-partitioned exchange, so the static side never re-shuffles;
-- convergence is one tiny ``agg().collect()`` per iteration (the
-  ``IterativeReducer.distance`` contract, IterativeReducer.java:24-32);
+- convergence is an aggregate observed on the round's own materializing
+  action (the ``IterativeReducer.distance`` contract,
+  IterativeReducer.java:24-32);
 - ``localCheckpoint`` every k iterations truncates the logical plan, which
   otherwise grows linearly and overwhelms the optimizer — the analogue of
   the reference's snapshot interval.
+
+Every loop owns its cache through ``LoopCache``: what it persisted is
+unpersisted when it returns or raises, and a relation the caller had
+already persisted is left cached.
 
 Scale: per-iteration state is never collected to the driver (only the scalar
 distance); state stays partitioned by key across iterations, so each loop
@@ -30,7 +35,7 @@ from __future__ import annotations
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -46,6 +51,49 @@ class IterationResult:
     record_counts: list[int] = field(default_factory=list)
 
 
+class LoopCache:
+    """The DataFrames one loop persisted. Used as a context manager, it
+    unpersists them when the loop returns or raises.
+
+    persist/unpersist are not reference-counted, so a loop must never
+    unpersist a relation its caller persisted: ``input()`` persists a
+    caller's DataFrame only when it is not cached already."""
+
+    def __init__(self) -> None:
+        self._owned: list[DataFrame] = []
+
+    def __enter__(self) -> LoopCache:
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.release()
+
+    def persist(self, df: DataFrame) -> DataFrame:
+        df = df.persist(StorageLevel.MEMORY_AND_DISK)
+        self._owned.append(df)
+        return df
+
+    def input(self, df: DataFrame) -> DataFrame:
+        level = df.storageLevel
+        return df if level.useMemory or level.useDisk else self.persist(df)
+
+    def drop(self, *dfs: DataFrame) -> None:
+        """Unpersist those of ``dfs`` this cache owns."""
+        for df in dfs:
+            if any(df is o for o in self._owned):
+                df.unpersist()
+        self._owned = [o for o in self._owned if not any(o is d for d in dfs)]
+
+    def release(self, keep: DataFrame | None = None) -> None:
+        """Unpersist every owned DataFrame except ``keep``."""
+        self.drop(*[o for o in self._owned if o is not keep])
+
+    def keep(self, df: DataFrame) -> DataFrame:
+        """Hand ``df`` over to the caller: it stays cached after the loop."""
+        self._owned = [o for o in self._owned if o is not df]
+        return df
+
+
 def negotiate_partitions(
     df: DataFrame, *, rows_per_partition: int = 100_000, floor: int = 8
 ) -> int:
@@ -56,93 +104,8 @@ def negotiate_partitions(
     iteration while preserving the session default as the ceiling for
     cluster-scale inputs. ``df`` should already be persisted — the count
     doubles as its materialization."""
-    import os
-
     default_n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    env = os.environ.get("SPARK_GRAFT_LOOP_PARTS")  # probe hook (r14 A/B)
-    if env:
-        return int(env)
     return max(floor, min(default_n, df.count() // rows_per_partition + 1))
-
-
-def pin_bucketed(
-    df: DataFrame,
-    key: str,
-    n: int,
-    *,
-    max_scatter_files: int = 4096,
-) -> DataFrame:
-    """Pin a loop-invariant relation to ``HashPartitioning(key, n)`` as a
-    bucketed parquet scratch table written INSIDE the query (r14, guide
-    §6/§2.4 — VERDICT r13 ask #5).
-
-    When the input's partition count S keeps the scatter write's file
-    count (S x n) bounded, each input task writes its bucket slices
-    directly — NO Exchange: the loop's one remaining setup shuffle
-    disappears from the plan. The bucketed scan reports
-    ``HashPartitioning(key, n)`` (+ sortBy ordering), so every per-round
-    join/aggregate/window clustered on ``key`` stays exchange-free, and
-    the pinned layout is DURABLE: a persisted repartition re-pays its
-    |2E| shuffle if cached blocks evict mid-loop (memory pressure,
-    executor loss); the scratch table never does. Above the file-count
-    bound (cluster-scale S — e.g. an 80k-task scan x 2k buckets would
-    scatter 160M files, guide §6's small-files trap), the write
-    repartitions first: ONE exchange, the same one the
-    repartition+persist shape paid, still amortized over the loop's
-    rounds and still eviction-proof.
-
-    **Status: measured and REJECTED for the shipped loops (r14).** The
-    deterministic wins are real — pagerank shuffle 17.775 -> 12.347 MB /
-    stages 133 -> 108, spmv 5.576 -> 3.166 MB, nmf 7.600 -> 2.838 MB,
-    lpa_converged 109.633 -> 100.447 MB — but a 3-draw interleaved A/B
-    (sf0.1, local[32], alternating order, same machine hour) showed the
-    parquet scatter-write + readback costs MORE wall than the one
-    in-memory exchange it replaces, on every loop: spmv 1.5-1.6 ->
-    3.7-5.0 s, nmf 3.0-3.3 -> 4.5-5.2 s, pagerank 4.7-5.5 -> 6.0-7.4 s,
-    power 2.1-3.2 -> 7.4 s, sssp 3.9-7.5 -> 17.2 s, lpa 9.0-10.5 ->
-    28.3 s (the gap widens under ambient I/O load — the scratch write
-    contends for the same disk the shuffle would have used, without the
-    shuffle's in-memory fast path). All loops ship the r13
-    repartition+persist shape; this helper and its unit tests remain as
-    the probe's implementation (OPTIMIZATION_r14.md §5), for deployments
-    where eviction-durability of the layout outweighs setup wall.
-
-    The scratch table + tmpdir live until process exit (atexit removal —
-    the operators' standard scratch discipline): table metadata is in the
-    session's in-memory catalog, and dropping the files earlier would
-    break lineage recompute of downstream cached state under eviction.
-    Built inside the timed region on every invocation — never reused
-    across runs."""
-    import tempfile
-    import uuid
-
-    from ..operators.incremental import _cleanup_at_exit
-
-    spark = df.sparkSession
-    # autoBucketedScan silently falls back to file-split reads when the
-    # query above the scan does not itself require the clustering — which
-    # is exactly the loops' cached-bare-scan case (sssp/spmv/power persist
-    # the pinned relation as-is): the cache would then hold file-split
-    # partitions and every round's join would re-exchange the static side.
-    # The pinned layout must ALWAYS be read bucketed; the heuristic is for
-    # tables that are incidentally bucketed, not for scratch relations
-    # that exist only to carry a partitioning.
-    spark.conf.set(
-        "spark.sql.sources.bucketing.autoBucketedScan.enabled", "false"
-    )
-    if df.rdd.getNumPartitions() * n > max_scatter_files:
-        df = df.repartition(n, key)
-    tbl = f"pinned_{key}_{uuid.uuid4().hex[:12]}"
-    root = tempfile.mkdtemp(prefix="pin_bucketed_")
-    _cleanup_at_exit(root, "")
-    (
-        df.write.format("parquet")
-        .bucketBy(n, key)
-        .sortBy(key)
-        .option("path", f"{root}/t")
-        .saveAsTable(tbl)
-    )
-    return spark.table(tbl)
 
 
 def l1_state_distance(
@@ -170,124 +133,92 @@ def iterate(
     step: Callable[[DataFrame, int], DataFrame],
     *,
     max_iterations: int = 50,
-    distance: Callable[[DataFrame, DataFrame], float] | None = None,
-    observed_distance=None,
+    observed_distance: Column | None = None,
     threshold: float = 0.0,
     checkpoint_interval: int = 5,
-    storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
     observe_counts: bool = False,
 ) -> IterationResult:
-    """Run ``state ← step(state, i)`` until convergence or max_iterations.
-
-    ``distance(prev, curr) -> float``: when given, iteration stops once the
-    value is ≤ ``threshold`` (the reference's termination contract —
-    JobClient.runIterativeJob, JobClient.java:1366-1381). When None, runs
-    exactly ``max_iterations`` steps (the fixed-iteration mode,
-    JobConf.java:494-500).
+    """Run ``state ← step(state, i)`` for i = 1, 2, … until convergence or
+    ``max_iterations``.
 
     ``observed_distance``: an aggregate Column over the NEW state's columns
     (e.g. ``F.sum(F.abs(F.col("delta")))`` when the step carries a delta
-    column). The scalar rides the iteration's own materializing action via
-    ``df.observe`` — ONE Spark job per iteration, with no prev⋈curr join at
-    all (the distance job the ``distance`` callable would pay). Same
-    ``IterativeReducer.distance`` contract (IterativeReducer.java:24-32);
-    mutually exclusive with ``distance``.
+    column). Iteration stops once its value is ≤ ``threshold`` (the
+    reference's termination contract — JobClient.runIterativeJob,
+    JobClient.java:1366-1381; IterativeReducer.distance,
+    IterativeReducer.java:24-32). The scalar rides the round's one
+    materializing action via ``df.observe``: no prev⋈curr join and no
+    separate distance action. Every round is checkpointed, because such a
+    step reads the previous state twice (its contributions and its prior
+    value), which would double the plan per round. When None, the loop
+    runs exactly ``max_iterations`` steps (the fixed-iteration mode,
+    JobConf.java:494-500), materializing and checkpointing every
+    ``checkpoint_interval`` rounds and at the last one.
 
     ``observe_counts``: attach a per-iteration ``df.observe`` counter — the
     analogue of the reference's per-iteration record stats reported to the
     master (IterationInfo, JobTracker.java:5516-5583; Counters.java) —
     piggybacked on the iteration's existing action, zero extra jobs.
+
+    If ``step`` or a materializing action raises, every state this call
+    persisted is unpersisted before the error propagates.
     """
     from pyspark.sql import Observation
 
     if max_iterations < 1:
         raise ValueError("max_iterations must be >= 1")
-    if distance is not None and observed_distance is not None:
-        raise ValueError("pass distance OR observed_distance, not both")
-    state = state.persist(storage_level)
-    state.count()  # materialize so each iteration starts from computed state
+    observed = observed_distance is not None
     distances: list[float] = []
-    record_counts: list[int] = []
     observations: list[Observation] = []
-    pending_unpersist: list[DataFrame] = []
     converged = False
     i = 0
-    for i in range(1, max_iterations + 1):
-        new_state = step(state, i)
-        if observed_distance is not None:
-            # observed-distance steps carry a delta column, which makes them
-            # reference the previous state TWICE (once through the
-            # contributions, once for the prev value) — the logical plan
-            # would double per iteration. Truncate lineage every iteration;
-            # the lazy checkpoint materializes on this iteration's action.
-            new_state = new_state.localCheckpoint(eager=False)
-        elif i % checkpoint_interval == 0:
-            # truncate lineage: plan size otherwise grows per iteration
-            new_state = new_state.localCheckpoint(eager=False)
-        if observe_counts:
-            # observe AFTER any checkpoint: localCheckpoint replaces the
-            # logical plan, which would drop the CollectMetrics node.
-            # Anonymous Observation(): the name must be globally unique —
-            # joining the states of two separate runs whose iteration i
-            # carried the same metric name fails with DUPLICATED_METRICS_NAME
-            obs = Observation()
-            new_state = new_state.observe(obs, F.count(F.lit(1)).alias("records"))
-            observations.append(obs)
-        if observed_distance is not None:
-            dist_obs = Observation()  # anonymous: see observe_counts note
-            new_state = new_state.observe(
-                dist_obs, observed_distance.alias("distance")
-            )
-            new_state = new_state.persist(storage_level)
-            # the count is the SINGLE job of this iteration: it computes the
-            # step, caches the state, and fills the observation in one pass
-            new_state.count()
-            d = float(dist_obs.get["distance"] or 0.0)
-            distances.append(d)
-            state.unpersist()
-            state = new_state
-            if d <= threshold:
-                converged = True
-                break
-            continue
-        new_state = new_state.persist(storage_level)
-        if distance is not None:
-            # the distance aggregation is the materializing action — the
-            # persisted new_state is computed (and cached) by this one job,
-            # so each iteration runs a single Spark job, not two
-            d = distance(state, new_state)
-            distances.append(d)
-            state.unpersist()
-            state = new_state
-            if d <= threshold:
-                converged = True
-                break
-        else:
-            # fixed-iteration mode: materialize at the checkpoint cadence and
-            # at the end, not every iteration — persist() markers make a
-            # multiply-referenced state compute once within the one job that
-            # eventually runs, so the intermediate counts were pure job
-            # overhead; the interval-count still bounds the optimizer's plan
-            # depth (the lazy localCheckpoint above truncates when it
-            # materializes). Intermediate states must KEEP their persist
-            # markers until that job runs: unpersisting an unmaterialized
-            # state removes the marker, and a step that references state
-            # twice (e.g. SSSP's full-outer join) would then double the
-            # plan per un-checkpointed iteration. Defer the unpersist to
-            # after the next materialization.
-            pending_unpersist.append(state)
-            state = new_state
-            if i % checkpoint_interval == 0 or i == max_iterations:
-                new_state.count()
-                for old in pending_unpersist:
-                    old.unpersist()
-                pending_unpersist.clear()
-    for obs in observations:
-        record_counts.append(int(obs.get["records"]))
+    # holds the persisted states that a later round may still read
+    with LoopCache() as held:
+        state = held.input(state)
+        state.count()  # each iteration starts from computed state
+        for i in range(1, max_iterations + 1):
+            state = step(state, i)
+            checkpoint = observed or i % checkpoint_interval == 0
+            if checkpoint:
+                # truncates lineage when this round's action materializes it
+                state = state.localCheckpoint(eager=False)
+            if observe_counts:
+                # observe AFTER any checkpoint: localCheckpoint replaces the
+                # logical plan, which would drop the CollectMetrics node.
+                # Anonymous Observation(): the name must be globally unique —
+                # joining the states of two separate runs whose iteration i
+                # carried the same metric name fails with
+                # DUPLICATED_METRICS_NAME
+                obs = Observation()
+                state = state.observe(obs, F.count(F.lit(1)).alias("records"))
+                observations.append(obs)
+            if observed:
+                dist_obs = Observation()
+                state = state.observe(dist_obs, observed_distance.alias("distance"))
+            # Persist every round, checkpointed ones too. A bare
+            # localCheckpoint carries its origin plan's *estimated* size,
+            # which a step that joins its state twice squares every round
+            # until size estimation itself stalls; a materialized cache
+            # carries the round's real size. An unmaterialized round must
+            # also keep its persist marker until the action that computes
+            # it runs, or such a step doubles the plan per round.
+            state = held.persist(state)
+            if checkpoint or i == max_iterations:
+                # one action computes every round since the last one;
+                # earlier states are then no longer read
+                state.count()
+                held.release(keep=state)
+            if observed:
+                d = float(dist_obs.get["distance"] or 0.0)
+                distances.append(d)
+                if d <= threshold:
+                    converged = True
+                    break
+        held.keep(state)
     return IterationResult(
         state=state,
         iterations=i,
         converged=converged,
         distances=distances,
-        record_counts=record_counts,
+        record_counts=[int(obs.get["records"]) for obs in observations],
     )

@@ -59,27 +59,24 @@ def test_incremental_pagerank_matches_cold_recompute(spark, sf_dir):
     assert warm.iterations <= cold.iterations
 
 
-@pytest.mark.slow  # r14: driver verify window (ask #6)
-def test_long_loop_stability(spark, sf_dir):
+def test_long_loop_stability(spark):
     """SURVEY §7 hard-part 1: 50+ iterations must not blow up the plan —
-    localCheckpoint every checkpoint_interval truncates lineage. A linear
-    plan-growth bug shows up here as super-linear wall-clock or a stack
-    overflow in Catalyst."""
-    from incr_iter_hadoop_spark.operators.iterative import (
-        _lineitem_edges,
-        pagerank,
-    )
+    iterate()'s default cadence checkpoints every 5th round, truncating
+    lineage. The step reads its state twice, so without truncation the
+    plan would double every round."""
+    from incr_iter_hadoop_spark.plans.loopdriver import iterate
 
-    res = pagerank(
-        _lineitem_edges(spark, sf_dir),
-        max_iterations=55,
-        checkpoint_interval=5,
-    )
-    assert res.iterations == 55
-    assert res.state.count() > 0
-    # plan of the final state must stay bounded (truncated by checkpoints)
-    plan_lines = res.state._jdf.queryExecution().optimizedPlan().toString()
-    assert len(plan_lines.splitlines()) < 200, "lineage not truncated"
+    state0 = spark.range(64).select(F.col("id").alias("k"), F.lit(1.0).alias("v"))
+
+    def step(s, i):
+        other = s.select("k", (F.col("v") + F.col("k")).alias("w"))
+        return s.join(other, "k").select("k", ((F.col("v") + F.col("w")) / 2).alias("v"))
+
+    res = iterate(state0, step, max_iterations=57)
+    assert res.iterations == 57
+    assert res.state.count() == 64
+    plan = res.state._jdf.queryExecution().analyzed().toString()
+    assert len(plan.splitlines()) < 200, "lineage not truncated"
 
 
 def test_sssp_fixpoint_is_stable(spark, sf_dir):
@@ -453,18 +450,6 @@ def test_iterate_observe_counts(spark):
 
     res = iterate(state0, step, max_iterations=3, observe_counts=True)
     assert res.record_counts == [100, 100, 100]
-
-    # and with a distance-terminated loop — the distance callable is the
-    # materializing action per the iterate() contract, so it must touch curr
-    res2 = iterate(
-        state0,
-        step,
-        max_iterations=5,
-        distance=lambda p, c: float(c.count()),
-        threshold=-1.0,
-        observe_counts=True,
-    )
-    assert res2.record_counts == [100] * res2.iterations
 
 
 def test_one2one_join_strict_validation(spark):

@@ -86,22 +86,6 @@ def test_observed_distance_matches_join_based_l1(spark):
         assert abs(bounded[row["node"]] - row["rank"]) < 1e-12
 
 
-def test_bounded_pagerank_cadence_is_value_invariant(spark):
-    """r14: bounded mode materializes every round (checkpoint cadence 1 —
-    the interval-5 mega-job re-derived the lazily-persisted invariants,
-    doubling shuffle writes). The cadence is a physical knob: ranks must
-    be bit-identical whatever interval the caller passes."""
-    edges = _edges(spark)
-    base = {
-        r["node"]: r["rank"]
-        for r in pagerank(edges, max_iterations=5).state.collect()
-    }
-    wide = pagerank(edges, max_iterations=5, checkpoint_interval=3)
-    for row in wide.state.collect():
-        assert base[row["node"]] == row["rank"]
-    assert wide.iterations == 5
-
-
 def test_l1_state_distance_counts_one_sided_keys(spark):
     a = spark.createDataFrame([(1, 1.0), (2, 3.0)], "node long, rank double")
     b = spark.createDataFrame([(2, 1.5), (3, 2.0)], "node long, rank double")

@@ -74,9 +74,8 @@ def test_preserve_store_refresh_reads_are_bucket_pruned(spark, tmp_path):
     from incr_iter_hadoop_spark.sources.preserve_store import PreserveStore
 
     rows = [(g, s, float(g * 10 + s)) for g in range(64) for s in range(4)]
-    # r14: pin_bucketed pins autoBucketedScan=false session-wide (the graph
-    # loops' pinned layouts must always read bucketed), so the restore
-    # contract is "back to the pre-scope value", not a literal "true"
+    # the restore contract is "back to the pre-scope value", not a literal
+    # "true": the session may run with autoBucketedScan disabled
     conf_before = spark.conf.get(
         "spark.sql.sources.bucketing.autoBucketedScan.enabled"
     )
