@@ -1,4 +1,4 @@
-"""Text column expressions: tokenization, shingles, fingerprints, quality.
+"""Text column expressions: tokenization and token n-grams.
 
 The reference's text layer is ``StringTokenizer`` in app mappers
 (incr-hadoop-0.1/src/examples/org/apache/hadoop/examples/WordCount.java:35-44)
@@ -11,17 +11,9 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# whitespace tokenizer — mirror of StringTokenizer defaults
-TOKEN_SEP = r"\s+"
-
 # tiny language-marker lexicons for the n-gram/stopword language heuristic;
 # deterministic and trivially mirrored in SQL for the oracle
 EN_STOPWORDS = ("the", "a", "of", "and", "to", "in", "is")
-
-
-def tokens(text: Column) -> Column:
-    """Whitespace tokens of a trimmed string (array<string>)."""
-    return F.split(F.trim(text), TOKEN_SEP)
 
 
 def ws_tokens(text: Column) -> Column:
@@ -32,13 +24,6 @@ def ws_tokens(text: Column) -> Column:
     oracle MUST go through this (a drifting copy silently desynchronizes
     from its oracle — review finding r4)."""
     return F.filter(F.split(F.trim(text), " "), lambda t: t != "")
-
-
-def token_count(text: Column) -> Column:
-    """Number of whitespace tokens; 0 for empty/blank strings."""
-    return F.when(F.length(F.trim(text)) == 0, F.lit(0)).otherwise(
-        F.size(tokens(text))
-    )
 
 
 def token_ngrams(toks: Column, n: int) -> Column:
@@ -55,38 +40,3 @@ def token_ngrams(toks: Column, n: int) -> Column:
         F.array().cast("array<string>")
     )
 
-
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """Distinct n-word shingles (array<string>) — the MinHash/Jaccard unit.
-    Short docs (< n tokens) degrade to their single whole-text shingle."""
-    toks = tokens(text)
-    return F.when(
-        F.size(toks) >= n, F.array_distinct(token_ngrams(toks, n))
-    ).otherwise(F.array(F.concat_ws(" ", toks)))
-
-
-def fingerprint(text: Column) -> Column:
-    """Deterministic document fingerprint: md5 of the casefolded,
-    whitespace-normalized text. Stable across engines (DuckDB md5 matches)."""
-    return F.md5(F.regexp_replace(F.lower(F.trim(text)), TOKEN_SEP, " "))
-
-
-def punct_ratio(text: Column) -> Column:
-    """Fraction of characters that are punctuation."""
-    cleaned = F.regexp_replace(text, r"[^!-/:-@\[-`{-~]", "")
-    return F.when(F.length(text) > 0, F.length(cleaned) / F.length(text)).otherwise(
-        F.lit(0.0)
-    )
-
-
-def stopword_ratio(text: Column) -> Column:
-    """Fraction of tokens that are English stopwords (quality/lang-id input)."""
-    toks = tokens(F.lower(text))
-    hits = F.size(F.filter(toks, lambda t: t.isin(*EN_STOPWORDS)))
-    return F.when(F.size(toks) > 0, hits / F.size(toks)).otherwise(F.lit(0.0))
-
-
-def mean_token_len(text: Column) -> Column:
-    toks = tokens(text)
-    total = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
-    return F.when(F.size(toks) > 0, total / F.size(toks)).otherwise(F.lit(0.0))

@@ -2,8 +2,7 @@
 
 The reference hand-rolls these per app over ``TreeMap<Integer,Double>``:
 cosine similarity (incr-hadoop-0.1/src/examples/org/apache/hadoop/examples/
-iterative/IterKmeans.java:295-310), Euclidean distance (IterKmeans.java:
-460-483). Here they are ``zip_with`` + ``aggregate`` over ``array<T>``
+iterative/IterKmeans.java:295-310). Here they are ``zip_with`` + ``aggregate`` over ``array<T>``
 columns — no Python UDF in the hot path, so whole-stage codegen applies and
 the expressions scale with executor count, not driver throughput.
 """
@@ -33,29 +32,6 @@ def cosine(a: Column, b: Column) -> Column:
     IterKmeans.java:295-310 divides only when norms are positive)."""
     denom = norm2(a) * norm2(b)
     return F.when(denom > 0, dot(a, b) / denom).otherwise(F.lit(0.0))
-
-
-def l2_distance(a: Column, b: Column) -> Column:
-    """Euclidean distance between two array columns (IterKmeans.java:460-483)."""
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(
-                a, b, lambda x, y: (x.cast("double") - y.cast("double")) ** 2
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-
-
-def l1_distance(a: Column, b: Column) -> Column:
-    """Manhattan distance (the reference's PageRank convergence metric shape —
-    IterPageRank.java:190-194 accumulates |prev − curr|)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: F.abs(x.cast("double") - y.cast("double"))),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
 
 
 def unit(a: Column, norm_col: Column) -> Column:

@@ -51,23 +51,6 @@ def sample_fraction(
     return df.where(hash_gate(F.col(key_col), fraction, seed))
 
 
-def sample_stratified(
-    df: DataFrame,
-    strata_col: str,
-    key_col: str,
-    fraction: float,
-    seed: str = "s0",
-) -> DataFrame:
-    """Per-stratum deterministic sample: the gate hashes (stratum, key), so
-    each stratum is sampled at ``fraction`` independently — no per-stratum
-    counts or second pass needed (contrast sampleBy, which needs fractions
-    per key up front and a driver-side map)."""
-    composite = F.concat(
-        F.col(strata_col).cast("string"), F.lit("|"), F.col(key_col).cast("string")
-    )
-    return df.where(hash_gate(composite, fraction, seed))
-
-
 def train_test_split(
     df: DataFrame, key_col: str, test_fraction: float, seed: str = "split"
 ) -> DataFrame:

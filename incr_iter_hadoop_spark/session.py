@@ -14,6 +14,39 @@ import os
 from pyspark.sql import SparkSession
 
 
+# read for the host's physical RAM; the heap default never exceeds a share
+# of it
+_MEMINFO = "/proc/meminfo"
+
+
+def _default_driver_mem(cpus: str) -> str:
+    """Default driver heap for ``local[cpus]``. local-mode executors share
+    the driver JVM, so per-task execution memory is heap/cores: the heap
+    scales with the core count (3/4 GiB per core, 12 GiB floor) to keep
+    hash aggregates and broadcast builds off the GC floor — a fixed heap
+    runs 4x the concurrent tasks in the same memory at local[32] vs
+    local[8]. It is capped at 60% of physical RAM (``MemTotal``), so a
+    many-core host with little RAM never asks for a heap the machine
+    cannot back; where ``/proc/meminfo`` is unreadable the cap is
+    skipped."""
+    try:
+        n_cores = int(cpus)
+    except ValueError:  # "*" — all machine cores
+        n_cores = os.cpu_count() or 8
+    gib = max(12, (n_cores * 3) // 4)
+    try:
+        with open(_MEMINFO) as f:
+            total_kib = next(
+                int(line.split()[1])
+                for line in f
+                if line.startswith("MemTotal:")
+            )
+        gib = min(gib, max(1, int(0.6 * total_kib / 2**20)))
+    except (OSError, ValueError, IndexError, StopIteration):
+        pass
+    return f"{gib}g"
+
+
 def get_spark(
     app_name: str = "incr-iter-hadoop-spark",
     master: str | None = None,
@@ -29,22 +62,7 @@ def get_spark(
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
-    # r14 (VERDICT r13 ask #4): the driver heap default scales with the
-    # local core count — a fixed 12 g heap runs 4x the concurrent tasks in
-    # the same memory at local[32] vs local[8], the prime GC suspect for
-    # every r13 scaling ratio reading < 1 (8 cores beat 32 on all 14
-    # headline queries). local-mode executors share the driver JVM, so
-    # per-task execution memory is heap/cores; 512 MiB+ per concurrent
-    # task keeps hash aggregates and broadcast builds off the GC floor.
-    # SPARK_GRAFT_DRIVER_MEM still overrides (deployments size their own
-    # driver); the 12 g floor keeps <=16-core runs byte-identical to the
-    # r4..r13 recorded history.
-    try:
-        n_cores = int(cpus)
-    except ValueError:  # "*" — all machine cores
-        n_cores = os.cpu_count() or 8
-    default_mem = f"{max(12, (n_cores * 3) // 4)}g"
-    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", default_mem)
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(cpus)
 
     builder = (
         SparkSession.builder.appName(app_name)

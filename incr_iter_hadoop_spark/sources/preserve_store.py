@@ -43,11 +43,8 @@ still benefits from planner-side bucket pruning and min/max range stats.
 from __future__ import annotations
 
 import contextlib
-import hashlib
-import json
 import os
 import re
-import shutil
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
@@ -55,7 +52,6 @@ from pyspark.sql import functions as F
 
 from . import occ
 
-_META = "meta.json"
 # max #affected group keys collected to the driver for isin() pushdown; above
 # this the store falls back to a co-bucketed semi-join (still exchange-free
 # on the store side). The reference does one point lookup per delta key, so a
@@ -65,47 +61,24 @@ DEFAULT_INLINE_KEYS = 5000
 # min/max range pushdown only (parquet-mr evaluates the or() chain
 # recursively — ~1500 values overflows the executor stack)
 _PUSHDOWN_IN_MAX = 200
-# idempotence tokens retained for this many trailing versions (replays only
-# ever target the most recent uncommitted batch; see refresh)
-_TOKEN_KEEP = 8
+_NULL_KEYS = (
+    "PreserveStore.refresh: delta contains NULL group keys; "
+    "NULL groups cannot be tracked by the layered store"
+)
 
 
-def _schema_ddl(df: DataFrame) -> str:
-    return ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
-    )
-
-
-class PreserveStore:
+class PreserveStore(occ.StoreCore):
     """A named, versioned preserve store rooted at ``path``.
 
     ``agg_sql`` maps output column name -> SQL aggregate expression over the
     contribution columns (stored in the metadata so a fresh session can
-    re-derive results without Python state).
-
-    CONCURRENCY CONTRACT (r8, hardened r9): single writer, many readers —
-    enforced optimistically at every mutation's atomic meta commit
-    (flock-guarded compare + staged-data publish + meta replace,
-    ``occ.commit_meta``); of two concurrent writers exactly one wins and
-    the loser raises ``ConcurrentWriteError`` with the store unharmed —
-    its staged data can never land on a committed version name. Readers
-    never block and never observe partial commits. Token-carrying
-    mutations are safely retried via ``occ.retrying`` (the streaming
-    sinks do this), idempotent under replay.
+    re-derive results without Python state). Commits, staging, tokens and
+    ``vacuum`` follow ``occ.StoreCore``'s single-writer OCC contract.
     """
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        path: str,
-        stage_retention_sec: float | None = None,
-    ):
-        self.spark = spark
-        self.path = os.path.abspath(path)
-        self._meta: dict | None = None
-        # vacuum/sweep retention for in-flight staged artifacts (r10):
-        # None → occ.STAGE_RETENTION_SEC; see Scd2Store.__init__
-        self.stage_retention_sec = stage_retention_sec
+    _CATALOG_PREFIX = "preserve"
+    _KEYS = "group_keys"
+    _TOKENS = "refresh_tokens"
 
     # SQL confs are SESSION-global, so two same-session store operations
     # scoping confs concurrently would corrupt each other's view and could
@@ -131,7 +104,7 @@ class PreserveStore:
         Serialized per process (``_conf_lock``): concurrent same-session
         scopes would save each other's in-flight values as their "prior"
         and restore them out of order, leaking a mutated conf into the
-        session (r9 review)."""
+        session."""
         with self._conf_lock():
             prior: dict[str, str | None] = {}
             for k, v in confs.items():
@@ -158,55 +131,6 @@ class PreserveStore:
 
     # -- metadata ----------------------------------------------------------
 
-    def exists(self) -> bool:
-        return os.path.isfile(os.path.join(self.path, _META))
-
-    @property
-    def meta(self) -> dict:
-        if self._meta is None:
-            with open(os.path.join(self.path, _META)) as f:
-                self._meta = json.load(f)
-        return self._meta
-
-    def _meta_path(self) -> str:
-        return os.path.join(self.path, _META)
-
-    def _occ_begin(self) -> int | None:
-        """Begin a mutation (single-writer OCC, round 8): drop the cached
-        meta so the operation reads the CURRENT committed state, and
-        capture the on-disk commit sequence the commit will be validated
-        against (``_write_meta(..., expect=...)``). Same contract as
-        ``Scd2Store`` — see ``sources/occ.py``."""
-        self._meta = None
-        return occ.disk_seq(self._meta_path())
-
-    def _write_meta(
-        self,
-        meta: dict,
-        *,
-        expect: int | None,
-        op: str = "PreserveStore",
-        publish=None,
-    ) -> int:
-        """Atomic commit point with the OCC compare step (round 8): of two
-        concurrent writers exactly one wins; the loser raises
-        ``ConcurrentWriteError`` instead of silently clobbering the
-        winner's version bump. Returns the new commit sequence. The whole
-        compare+stamp+replace runs under the store's ``flock`` with a
-        unique per-writer tmp file (``occ.commit_meta``, r9); ``publish``
-        renames this mutation's STAGED data directories onto their final
-        version names inside the same critical section."""
-        seq = occ.commit_meta(
-            meta,
-            self._meta_path(),
-            expect,
-            op,
-            publish,
-            retention_sec=self.stage_retention_sec,
-        )
-        self._meta = meta
-        return seq
-
     @property
     def group_keys(self) -> list[str]:
         return list(self.meta["group_keys"])
@@ -227,34 +151,22 @@ class PreserveStore:
     # -- base tables (bucketed external parquet) ---------------------------
 
     def _table_name(self, which: str, era: int | None = None) -> str:
-        # catalog-safe, stable per store path so re-registration is
-        # idempotent; the slug alone is not injective across paths
-        # (/tmp/a-b vs /tmp/a_b), so a short hash of the raw path keeps
-        # distinct stores from clobbering each other's catalog entries
         era = int(self.meta["base_version"]) if era is None else era
-        slug = re.sub(r"[^0-9a-zA-Z]+", "_", self.path).strip("_").lower()
-        tag = hashlib.md5(self.path.encode()).hexdigest()[:8]
-        return f"preserve_{slug}_{tag}_{which}_v{era}"
+        return self._catalog_name(f"{which}_v{era}")
+
+    def _base_tables(self, era: int | None = None) -> list[str]:
+        return [self._table_name(w, era) for w in ("contribs", "results")]
 
     def _base_path(self, which: str, era: int | None = None) -> str:
         era = int(self.meta["base_version"]) if era is None else era
         return os.path.join(self.path, f"base_v{era}", which)
 
     def _base(self, which: str, era: int | None = None) -> DataFrame:
-        """Base table as a *bucketed* scan, re-registering the external table
-        DDL when this session has never seen it (cross-session reload — the
-        bucketing spec lives in the catalog, not the files)."""
-        name = self._table_name(which, era)
-        if not self.spark.catalog.tableExists(name):
-            m = self.meta
-            keys = ", ".join(f"`{k}`" for k in m["group_keys"])
-            self.spark.sql(
-                f"CREATE TABLE {name} ({m['schema_ddl'][which]}) USING PARQUET"
-                f" CLUSTERED BY ({keys}) SORTED BY ({keys})"
-                f" INTO {m['num_buckets']} BUCKETS"
-                f" LOCATION '{self._base_path(which, era)}'"
-            )
-        return self.spark.table(name)
+        return self._bucketed_table(
+            self._table_name(which, era),
+            self.meta["schema_ddl"][which],
+            self._base_path(which, era),
+        )
 
     # -- lifecycle ---------------------------------------------------------
 
@@ -271,15 +183,13 @@ class PreserveStore:
         results as the version-0 base. One full shuffle — paid exactly
         once.
 
-        Same staged single-commit discipline as every other mutation
-        (r9 — pre-r9 this committed meta FIRST and wrote the bases
-        unstaged afterwards, so a crash between them left a committed
-        store whose lazy table registration would silently serve an
-        empty base): both bases write into one unique staging directory
-        and the rename onto ``base_v0`` happens inside the meta commit's
-        critical section. A crash mid-write leaves ``exists() == False``
-        with only a ``.stage-*`` orphan; a concurrent initialize loser
-        cannot clobber the winner's published base."""
+        Both bases write into one unique staging directory and the rename
+        onto ``base_v0`` happens inside the meta commit's critical section
+        — committing meta before the bases are complete would leave a
+        committed store whose lazy table registration silently serves an
+        empty base. A crash mid-write leaves ``exists() == False`` with
+        only a ``.stage-*`` orphan; a concurrent initialize loser cannot
+        clobber the winner's published base."""
         v0 = self._occ_begin()
         results = contribs.groupBy(*group_keys).agg(
             *[F.expr(sql).alias(name) for name, sql in agg_sql.items()]
@@ -292,37 +202,25 @@ class PreserveStore:
             "version": 0,
             "base_version": 0,
             "schema_ddl": {
-                "contribs": _schema_ddl(contribs),
-                "results": _schema_ddl(results),
+                "contribs": self._schema_ddl(contribs),
+                "results": self._schema_ddl(results),
             },
             # era -> layer count of RETIRED (compacted-away) eras still on
             # disk; readers pinned to an old era keep working until vacuum()
             "retired": {},
         }
         stage_root = os.path.join(self.path, occ.stage_name("base_v0"))
-        self._meta = meta  # _stage_base/_table_name read this meta
-        try:
+        with self._staged(
+            stage_root,
+            os.path.join(self.path, "base_v0"),
+            expect=v0,
+            op="PreserveStore.initialize",
+        ) as commit:
+            self._meta = meta  # _stage_base/_table_name read this meta
             self._stage_base("contribs", contribs, stage_root)
             self._stage_base("results", results, stage_root)
-            # stale catalog entries from a previous store at this path
-            # must not survive the publish (they may carry the wrong
-            # schema/bucketing); reads re-register from committed meta
-            for which in ("contribs", "results"):
-                self.spark.sql(
-                    f"DROP TABLE IF EXISTS {self._table_name(which)}"
-                )
-            self._write_meta(
-                meta,
-                expect=v0,
-                op="PreserveStore.initialize",
-                publish=lambda: occ.publish_dir(
-                    stage_root, os.path.join(self.path, "base_v0")
-                ),
-            )
-        except BaseException:
-            self._meta = None
-            shutil.rmtree(stage_root, ignore_errors=True)
-            raise
+            # a previous store at this path may have left entries
+            commit(meta, drop=self._base_tables())
         return self
 
     # -- layered reads -----------------------------------------------------
@@ -333,7 +231,7 @@ class PreserveStore:
 
     def _reader(self, which: str):
         """Parquet reader with the stored explicit schema where one exists
-        (contribs/results; r7 — no inference listing, no sampled-file
+        (contribs/results — no inference listing, no sampled-file
         dependence); sides without a recorded DDL (affected) infer."""
         ddl = self.meta["schema_ddl"].get(which)
         return self.spark.read.schema(ddl) if ddl else self.spark.read
@@ -345,9 +243,9 @@ class PreserveStore:
         """Layers 1..n as ONE multi-path scan, ``_v`` parsed from the layer
         directory name (``layers/b<era>/v<N>/<which>/part-*``, written by
         ``_layer_path`` so the pattern is store-controlled). One scan node
-        instead of n (r6, VERDICT r5 ask #7 profiling): the per-layer
-        unionByName chain cost one file listing and one plan subtree PER
-        LAYER — driver-side analysis time grew linearly with store depth,
+        instead of n: a per-layer
+        unionByName chain costs one file listing and one plan subtree PER
+        LAYER — driver-side analysis time grows linearly with store depth,
         and on object storage each listing is a round trip. A single
         multi-path scan lists in one parallelized pass, keeps the plan a
         constant size, and still pushes the group-key filter into every
@@ -356,8 +254,8 @@ class PreserveStore:
         # anchored to the data-file position (layers/b<e>/v<N>/<which>/
         # part-*): an unanchored leftmost match would pick up a matching
         # segment from the store root's own path and stamp the wrong _v
-        # on every row with no error (ADVICE r6). Explicit schema from
-        # meta where recorded (r7, see _reader).
+        # on every row with no error. Explicit schema from meta where
+        # recorded (see _reader).
         return self._reader(which).parquet(*paths).withColumn(
             "_v",
             F.regexp_extract(
@@ -494,15 +392,16 @@ class PreserveStore:
         (ReduceTask.java:3324-3500).
 
         ``token``: idempotence handle for at-least-once callers (a retried
-        orchestrator task, a replayed ``foreachBatch`` micro-batch; the
-        ``Scd2Store.apply_era`` analogue, r7). Recorded in the SAME meta
-        write as the version bump — one atomic commit — so a replayed
-        refresh with a seen token is a no-op returning the version it
-        committed, never a double-application of the delta. Tokens survive
-        ``compact()`` (the application is folded into the new base; the
-        recorded version then refers to the retired era) and are pruned
-        past a ``_TOKEN_KEEP``-version retention window so the meta commit
-        stays O(1) over an unbounded refresh stream.
+        orchestrator task, a replayed ``foreachBatch`` micro-batch).
+        Recorded in the SAME meta write as the version bump — one atomic
+        commit — so a replayed refresh with a seen token is a no-op
+        returning the version it committed, never a double-application of
+        the delta. Tokens survive ``compact()`` (the application is folded
+        into the new base; the recorded version then refers to the retired
+        era) and are pruned past the ``occ._TOKEN_KEEP``-version retention
+        window so the meta commit stays O(1) over an unbounded refresh
+        stream. Version numbers reset at compact, which can only
+        over-retain (never drop a within-window token).
 
         ``max_layers``: LSM-style cadence — when the layer count reaches it
         after this refresh, ``compact()`` folds everything into a fresh base
@@ -512,12 +411,11 @@ class PreserveStore:
         # scope: bucketed scans pinned on for the point reads below; the
         # inFilterThreshold is mutated inside (probe-dependent) and listed
         # here at its current value so the exit restores BOTH to the
-        # session's prior settings (ADVICE r03: no session-global leaks).
+        # session's prior settings (no session-global leaks).
         v0 = self._occ_begin()
-        if token is not None:
-            seen = self.meta.get("refresh_tokens", {})
-            if token in seen:
-                return int(seen[token])
+        seen = self._token_version(token)
+        if seen is not None:
+            return seen
         with self._scoped_confs(
             {
                 self._BUCKETED_SCAN_CONF: "false",
@@ -546,45 +444,83 @@ class PreserveStore:
         occ_expect: int | None = None,
     ) -> int:
         gk, sk = self.group_keys, self.source_keys
-        delta = delta.persist()
-        affected = delta.select(*gk).distinct().persist()
         v = self.version + 1
         # all three layer sides write into ONE unique staging directory
-        # (r9) renamed onto layers/b<B>/v<N> inside the commit's critical
+        # renamed onto layers/b<B>/v<N> inside the commit's critical
         # section — a loser's write can never land on a committed version
         # name (see occ.commit_meta)
         bv = int(self.meta["base_version"])
         stage_parent = os.path.join(
             self.path, f"layers/b{bv}", occ.stage_name(f"v{v}")
         )
-        # write the affected-key layer FIRST: the write materializes the
-        # persisted `affected`, so the strategy probe below is a cache hit
-        # instead of a second shuffle job. Crash-safe: staged dirs are
-        # invisible until published at the meta version bump.
-        affected.write.mode("overwrite").parquet(
-            os.path.join(stage_parent, "affected")
-        )
+        delta = delta.persist()
+        affected = delta.select(*gk).distinct().persist()
+        cached = [delta, affected]
+        try:
+            with self._staged(
+                stage_parent,
+                os.path.join(self.path, f"layers/b{bv}/v{v}"),
+                expect=occ_expect,
+                op="PreserveStore.refresh",
+            ) as commit:
+                # write the affected-key layer FIRST: the write
+                # materializes the persisted `affected`, so the strategy
+                # probe below is a cache hit instead of a second shuffle
+                # job. Crash-safe: staged dirs are invisible until
+                # published at the meta version bump.
+                affected.write.mode("overwrite").parquet(
+                    os.path.join(stage_parent, "affected")
+                )
+                keys_filter, affected_df = self._prune_plan(
+                    affected, inline_keys
+                )
+                prior = self._current("contribs", keys_filter, affected_df)
+                plus = delta.where(F.col(op_col) == "+").drop(op_col)
+                minus = delta.where(F.col(op_col) == "-").drop(op_col)
+                new_contribs = prior.join(
+                    minus.select(*gk, *sk).distinct(), gk + sk, "left_anti"
+                ).unionByName(plus)
+                new_contribs = new_contribs.persist()
+                cached.append(new_contribs)
+                recomputed = new_contribs.groupBy(*gk).agg(*self._agg_cols())
 
+                new_contribs.write.mode("overwrite").parquet(
+                    os.path.join(stage_parent, "contribs")
+                )
+                recomputed.write.mode("overwrite").parquet(
+                    os.path.join(stage_parent, "results")
+                )
+                meta = dict(self.meta)
+                meta["version"] = v
+                self._record_token(meta, token, v)
+                commit(meta)
+        finally:
+            for df in reversed(cached):
+                df.unpersist()
+        if max_layers is not None and v >= max_layers:
+            self.compact()
+        return self.version
+
+    def _prune_plan(self, affected: DataFrame, inline_keys: int):
+        """``(keys_filter, affected_df)`` for reading the affected groups
+        back: an exact ``isin`` filter when the key list is small enough
+        to collect, else ``affected`` itself for a co-bucketed semi-join.
+        Rejects NULL group keys: they can neither isin()-match nor
+        equi-join ``touched`` in ``_current`` — either path would silently
+        drop the delta row while the affected file still records it (the
+        reference's reduce keys are never null)."""
+        gk = self.group_keys
         # the probe decides the pruning strategy AND yields the key list
         # (limit(n+1) instead of count()+collect(): one job, not two —
         # per-refresh overhead matters when the delta is tiny, which is the
         # whole point of a refresh)
-        keys_filter = None
-        affected_df = None
         probe = (
             affected.limit(inline_keys + 1).collect() if len(gk) == 1 else None
         )
         if probe is not None and len(probe) <= inline_keys:
             keys = [r[0] for r in probe]
-            # NULL group keys can neither isin()-match nor equi-join
-            # `touched` in _current — either path would silently drop the
-            # delta row while the affected file still records it. Reject
-            # them loudly (the reference's reduce keys are never null).
             if any(k is None for k in keys):
-                raise ValueError(
-                    "PreserveStore.refresh: delta contains NULL group keys; "
-                    "NULL groups cannot be tracked by the layered store"
-                )
+                raise ValueError(_NULL_KEYS)
             # keep the EXACT in-filter eligible for parquet pushdown for
             # modest key lists (above the threshold Spark demotes it to a
             # min/max range filter). Capped: the exact pushdown compiles to
@@ -595,64 +531,12 @@ class PreserveStore:
                 "spark.sql.parquet.pushdown.inFilterThreshold",
                 str(min(max(len(keys), 10), _PUSHDOWN_IN_MAX)),
             )
-            keys_filter = F.col(gk[0]).isin(keys)
-        else:
-            if affected.where(
-                " OR ".join(f"`{k}` IS NULL" for k in gk)
-            ).limit(1).count():
-                raise ValueError(
-                    "PreserveStore.refresh: delta contains NULL group keys; "
-                    "NULL groups cannot be tracked by the layered store"
-                )
-            affected_df = affected
-
-        prior = self._current("contribs", keys_filter, affected_df)
-        plus = delta.where(F.col(op_col) == "+").drop(op_col)
-        minus = delta.where(F.col(op_col) == "-").drop(op_col)
-        new_contribs = prior.join(
-            minus.select(*gk, *sk).distinct(), gk + sk, "left_anti"
-        ).unionByName(plus)
-        new_contribs = new_contribs.persist()
-        recomputed = new_contribs.groupBy(*gk).agg(*self._agg_cols())
-
-        new_contribs.write.mode("overwrite").parquet(
-            os.path.join(stage_parent, "contribs")
-        )
-        recomputed.write.mode("overwrite").parquet(
-            os.path.join(stage_parent, "results")
-        )
-        new_contribs.unpersist()
-        affected.unpersist()
-        delta.unpersist()
-        meta = dict(self.meta)
-        meta["version"] = v
-        if token is not None:
-            # bounded retention (see Scd2Store._TOKEN_KEEP rationale):
-            # replays only target the most recent uncommitted batch, and an
-            # unpruned map would make every commit rewrite O(total-refreshes)
-            # of meta.json. Version numbers reset at compact, which can only
-            # over-retain (never drop a within-window token).
-            tokens = {
-                t: ver
-                for t, ver in meta.get("refresh_tokens", {}).items()
-                if int(ver) > v - _TOKEN_KEEP
-            }
-            tokens[token] = v
-            meta["refresh_tokens"] = tokens
-        final_parent = os.path.join(self.path, f"layers/b{bv}/v{v}")
-        try:
-            self._write_meta(
-                meta,
-                expect=occ_expect,
-                op="PreserveStore.refresh",
-                publish=lambda: occ.publish_dir(stage_parent, final_parent),
-            )
-        except BaseException:
-            shutil.rmtree(stage_parent, ignore_errors=True)
-            raise
-        if max_layers is not None and v >= max_layers:
-            self.compact()
-        return self.version
+            return F.col(gk[0]).isin(keys), None
+        if affected.where(
+            " OR ".join(f"`{k}` IS NULL" for k in gk)
+        ).limit(1).count():
+            raise ValueError(_NULL_KEYS)
+        return None, affected
 
     # -- maintenance -------------------------------------------------------
 
@@ -683,170 +567,60 @@ class PreserveStore:
         retired = dict(meta.get("retired", {}))
         retired[str(old_base_version)] = old_version
         meta["retired"] = retired
-        # stage the NEW base under a unique directory before flipping meta
-        # (r9): a crash leaves the old base intact and only a .stage
-        # orphan; the rename onto base_v<n+1> happens inside the commit's
-        # critical section, so a losing compact can never clobber a
-        # committed base of the same number
+        # stage the NEW base under a unique directory before flipping meta:
+        # a crash leaves the old base intact and only a .stage orphan; the
+        # rename onto base_v<n+1> happens inside the commit's critical
+        # section, so a losing compact can never clobber a committed base
+        # of the same number
         stage_root = os.path.join(
             self.path, occ.stage_name(f"base_v{new_base_version}")
         )
-        self._meta = meta  # _stage_base/_table_name read the new version
-        self._stage_base("contribs", contribs, stage_root)
-        self._stage_base("results", results, stage_root)
-        final_root = os.path.join(self.path, f"base_v{new_base_version}")
-        # stale catalog entries for the new version's names (a crashed
-        # pre-staging attempt) must not survive the publish — drop BEFORE
-        # the commit; readers lazily re-register from committed meta
-        for which in ("contribs", "results"):
-            self.spark.sql(
-                f"DROP TABLE IF EXISTS {self._table_name(which)}"
-            )
-        try:
-            self._write_meta(
-                meta,
-                expect=occ_expect,
-                op="PreserveStore.compact",
-                publish=lambda: occ.publish_dir(stage_root, final_root),
-            )
-        except BaseException:
-            # the cached meta above is UNCOMMITTED — if the OCC compare (or
-            # the write itself) fails, drop it so subsequent reads on this
-            # object re-read the committed state instead of silently
-            # serving the orphan base (which lacks the winner's commit)
-            self._meta = None
-            shutil.rmtree(stage_root, ignore_errors=True)
-            raise
+        with self._staged(
+            stage_root,
+            os.path.join(self.path, f"base_v{new_base_version}"),
+            expect=occ_expect,
+            op="PreserveStore.compact",
+        ) as commit:
+            self._meta = meta  # _stage_base/_table_name read the new version
+            self._stage_base("contribs", contribs, stage_root)
+            self._stage_base("results", results, stage_root)
+            # a crashed earlier attempt may have registered the new names
+            commit(meta, drop=self._base_tables())
 
     def _stage_base(
         self, which: str, df: DataFrame, stage_root: str
-    ) -> str:
-        """Bucketed base write into a staging subdirectory (r9):
-        ``bucketBy`` requires ``saveAsTable``, so the write goes through a
-        throwaway catalog name pointed at the staging path (dropped
-        immediately — the final location is lazily re-registered from
-        meta by ``_base`` after the commit renames it into place)."""
-        m = self.meta
-        staging = os.path.join(stage_root, which)
-        stage_tbl = (
-            f"{self._table_name(which)}_stg"
-            f"{hashlib.md5(staging.encode()).hexdigest()[:8]}"
-        )
-        return occ.stage_bucketed(
-            self.spark,
-            df,
-            int(m["num_buckets"]),
-            m["group_keys"],
-            staging,
-            stage_tbl,
+    ) -> None:
+        self._stage_bucketed(
+            df, os.path.join(stage_root, which), self._table_name(which)
         )
 
-    def vacuum(self, retain_sec: float = 0.0) -> None:
-        """Delete every retired era's base + layers and drop their catalog
-        registrations. Call once no reader still needs pre-compaction
-        versions — retired eras are a full state snapshot each, so leaving
-        them forever leaks O(|state|) disk per compaction.
+    def _vacuumed_meta(self) -> dict | None:
+        """Retired eras are a full state snapshot each, so leaving them
+        forever leaks O(|state|) disk per compaction: a vacuum forgets
+        every one of them."""
+        if not self.meta.get("retired", {}):
+            return None
+        return {**self.meta, "retired": {}}
 
-        COMMIT FIRST, DELETE AFTER (r8): the OCC compare must precede the
-        irreversible deletes — a vacuum losing the race to a concurrent
-        refresh/compact fails with NOTHING deleted. The delete phase is a
-        disk-scan sweep of every era directory the committed meta no
-        longer references (``_sweep_orphans``, r9), so a crash between
-        the commit and the deletes is healed by the next ``vacuum()``
-        instead of leaking disk forever. Same ordering and sweep contract
-        as ``Scd2Store.vacuum``; ``retain_sec`` (r10) is the Delta
-        ``VACUUM ... RETAIN`` discipline — unreferenced era artifacts
-        stay on disk until ``retain_sec`` has elapsed since a retaining
-        sweep FIRST saw them unreferenced (``occ.retention_clock``; age
-        runs from retirement, not dir mtime), so a vacuum loop can run
-        while readers still hold plans over just-retired eras (0 =
-        reclaim immediately, the quiesced-caller contract)."""
-        v0 = self._occ_begin()
-        if self.meta.get("retired", {}):
-            meta = dict(self.meta)
-            meta["retired"] = {}
-            self._write_meta(meta, expect=v0, op="PreserveStore.vacuum")
-        self._sweep_orphans(retain_sec)
+    def _orphan(self, rel: str) -> tuple[list[str], bool] | None:
+        # base_v<e> / layers/b<e> where e is neither the live base version
+        # nor a retired-but-still-readable era
+        m = re.fullmatch(r"base_v(\d+)|layers/b(\d+)", rel)
+        if m is None:
+            return None
+        era = int(m.group(1) or m.group(2))
+        keep = {int(self.meta["base_version"])} | {
+            int(e) for e in self.meta.get("retired", {})
+        }
+        if era in keep:
+            return None
+        return (self._base_tables(era) if m.group(1) else []), True
 
-    def _sweep_orphans(self, retain_sec: float = 0.0) -> None:
-        """Reclaim every era directory the COMMITTED meta does not
-        reference (r9): ``base_v<e>`` / ``layers/b<e>`` where ``e`` is
-        neither the live base version nor a retired-but-still-readable
-        era. Covers both the crashed-vacuum residue (retired cleared in
-        meta, directories still on disk) and a crashed ``compact()``'s
-        half-written next base (a retry rewrites it). Orphans are
-        invisible to readers — deleting them needs no commit.
-
-        Runs UNDER the store's commit lock with a fresh meta read (a
-        concurrent commit's just-published directories can never be
-        mistaken for orphans); ``.stage-*`` directories are reclaimed
-        only past the stage retention window (``stage_retention_sec`` /
-        ``occ.STAGE_RETENTION_SEC``) — inside the window they may be an
-        in-flight mutation's live staging. Where ``flock`` is
-        unavailable the same window gates FINAL-POSITIONED unreferenced
-        era directories too (``occ.final_is_sweepable``): lock-free, an
-        unreferenced ``base_v<e>`` / ``layers/b<e>`` may be a concurrent
-        refresh/compact's just-published data whose meta replace hasn't
-        landed, and sweeping it would make that writer's commit land on
-        deleted files (ADVICE r9)."""
-        ret = self.stage_retention_sec
-
-        def _sweep_stage(p: str) -> None:
-            if not occ.stage_is_young(p, ret):
-                shutil.rmtree(p, ignore_errors=True)
-
-        with occ.store_lock(self.path):
-            self._meta = None  # the committed meta as of THIS lock hold
-            keep = {int(self.meta["base_version"])} | {
-                int(e) for e in self.meta.get("retired", {})
-            }
-            for d in os.listdir(self.path):
-                if d.startswith(".stage-"):
-                    _sweep_stage(os.path.join(self.path, d))
-                    continue
-                m = re.fullmatch(r"base_v(\d+)", d)
-                if not m or int(m.group(1)) in keep:
-                    continue
-                if not occ.final_is_sweepable(
-                    os.path.join(self.path, d), ret
-                ):
-                    continue
-                if not occ.retention_clock(
-                    os.path.join(self.path, d), retain_sec
-                ):
-                    continue  # VACUUM RETAIN: in-flight readers (clock
-                    # runs from first-sight-as-unreferenced — r10 review)
-                era = int(m.group(1))
-                for which in ("contribs", "results"):
-                    self.spark.sql(
-                        f"DROP TABLE IF EXISTS "
-                        f"{self._table_name(which, era)}"
-                    )
-                shutil.rmtree(
-                    os.path.join(self.path, d), ignore_errors=True
-                )
-            lroot = os.path.join(self.path, "layers")
-            if os.path.isdir(lroot):
-                for d in os.listdir(lroot):
-                    m = re.fullmatch(r"b(\d+)", d)
-                    if d.startswith(".stage-"):
-                        _sweep_stage(os.path.join(lroot, d))
-                    elif (
-                        m
-                        and int(m.group(1)) not in keep
-                        and occ.final_is_sweepable(
-                            os.path.join(lroot, d), ret
-                        )
-                        and occ.retention_clock(
-                            os.path.join(lroot, d), retain_sec
-                        )
-                    ):
-                        shutil.rmtree(
-                            os.path.join(lroot, d), ignore_errors=True
-                        )
-                    elif m:
-                        # refresh staging lives INSIDE the live era's dir
-                        bdir = os.path.join(lroot, d)
-                        for sub in os.listdir(bdir):
-                            if sub.startswith(".stage-"):
-                                _sweep_stage(os.path.join(bdir, sub))
+    def _sweep_parents(self):
+        yield from super()._sweep_parents()
+        # refresh staging lives INSIDE its era's layers/b<e>
+        lroot = os.path.join(self.path, "layers")
+        if os.path.isdir(lroot):
+            for d in os.listdir(lroot):
+                if re.fullmatch(r"b\d+", d):
+                    yield os.path.join(lroot, d)

@@ -111,13 +111,30 @@ def test_reappearing_group_after_vanish(spark, tmp_path):
     assert _results_dict(store)[3] == (2.5, 1, 2.5)
 
 
+def _staged_dirs(root):
+    return [
+        os.path.join(d, n)
+        for d, subdirs, _ in os.walk(root)
+        for n in subdirs
+        if n.startswith(".stage-")
+    ]
+
+
 def test_null_group_key_rejected(spark, tmp_path):
     store = _fresh_store(spark, tmp_path, BASE_ROWS)
     bad = _delta(spark, [(None, 50, 1.0, "+")])
-    with pytest.raises(ValueError, match="NULL group keys"):
-        store.refresh(bad)
-    with pytest.raises(ValueError, match="NULL group keys"):
-        store.refresh(bad, inline_keys=0)  # semi-join path rejects too
+    def persisted():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    before = persisted()
+    # isin path, then the semi-join path: each rejects, and a rejected
+    # refresh releases what it cached and removes what it staged
+    for kwargs in ({}, {"inline_keys": 0}):
+        with pytest.raises(ValueError, match="NULL group keys"):
+            store.refresh(bad, **kwargs)
+        assert persisted() == before
+        assert _staged_dirs(store.path) == []
+    assert store.version == 0
 
 
 @pytest.mark.slow  # r14: driver verify window (ask #6)
